@@ -324,7 +324,7 @@ def q_encode_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pip_query(layers: list[Layer], strategy: str = "ancestor"):
+def _pip_query(layers: list[Layer], strategy: str = "auto"):
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
         pts = geotagged_points(spark, sf_dir)
         m = pip_join(pts, layers, strategy=strategy)
@@ -357,7 +357,7 @@ def q_pip_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     interval join (skew machinery, SURVEY.md §4 O15/round-4 note) — must
     produce identical rows."""
     pts = geotagged_points(spark, sf_dir)
-    m = pip_join(pts, RECT_LAYERS, broadcast_cells=False, salt=4)
+    m = pip_join(pts, RECT_LAYERS, strategy="prefix", salt=4)
     return m.select("point_id", "polygon_id")
 
 
@@ -367,13 +367,13 @@ def q_pip_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     the antimeridian wrap rect, and the face-5 polar cap all through the
     packed-BIGINT prefix equi-join with interval-containment residual."""
     pts = geotagged_points(spark, sf_dir)
-    m = pip_join(pts, ALL_LAYERS, broadcast_cells=False)
+    m = pip_join(pts, ALL_LAYERS, strategy="prefix")
     return m.select("point_id", "polygon_id")
 
 
 # Constructor specs for ALL_LAYERS — the serializable layer dimension the
 # fully distributed prefix arm builds its covering from ON EXECUTORS
-# (covering_df_distributed -> prefix_candidates_df); must describe exactly
+# (covering_df_distributed -> prefix_candidates); must describe exactly
 # the geometry of ALL_LAYERS so the dist arm's oracle is _pip_oracle(ALL_LAYERS).
 ALL_LAYER_SPECS = [
     {"polygon_id": "r_eu", "kind": "rect", "lat_lo": 35.0, "lng_lo": -10.0, "lat_hi": 60.0, "lng_hi": 30.0},

@@ -167,38 +167,11 @@ def main() -> None:
         # Fixed 128-way layout: file/row-group count bounds read parallelism (a
         # parquet row group is indivisible), so it must not depend on the writer's
         # core count or the 4N-core leg of the scaling run starves on N files.
-        # BENCH_SKEW_FRACTION > 0 materializes a SKEWED corpus: that fraction
-        # of rows' phash collapses into a ~0.003-degree hot box at (48, 10)
-        # — inside the r_eu layer, thousands of distinct leaf cells but ONE
-        # covering cell per level, so the shuffled ancestor join funnels the
-        # whole fraction through one reducer key unless salted.  Jitter in
-        # the low 16 bits of each phash half keeps leaf ids distinct (the
-        # probe salt hashes the leaf id, so a single-leaf hot spot would be
-        # unsplittable by design).
-        skew = float(os.environ.get("BENCH_SKEW_FRACTION", "0") or 0)
-        img_dir = os.environ.get(
-            "BENCH_IMAGES_DIR",
-            f"/tmp/s2bench_images_{N_IMAGES}"
-            + (f"_skew{int(skew * 100)}" if skew else ""),
-        )
+        img_dir = os.environ.get("BENCH_IMAGES_DIR", f"/tmp/s2bench_images_{N_IMAGES}")
         if not os.path.exists(os.path.join(img_dir, "_SUCCESS")):
             base = synthetic_images(spark, N_IMAGES, partitions=128, with_bytes=False).select(
                 "image_id", "caption", "phash"
             )
-            if skew:
-                up32 = int((48.0 + 90.0) / 180.0 * 2**32) & 0xFFFF0000
-                lo32 = int((10.0 + 180.0) / 360.0 * 2**32) & 0xFFFF0000
-                j1 = F.pmod(F.xxhash64(F.col("image_id")), F.lit(65536))
-                j2 = F.pmod(F.xxhash64(F.col("image_id"), F.lit(1)), F.lit(65536))
-                hot = F.shiftleft(F.lit(up32) + j1, 32).bitwiseOR(F.lit(lo32) + j2)
-                base = base.withColumn(
-                    "phash",
-                    F.when(
-                        F.pmod(F.xxhash64(F.col("image_id"), F.lit(2)), F.lit(1000))
-                        < F.lit(int(skew * 1000)),
-                        hot,
-                    ).otherwise(F.col("phash")),
-                )
             base.write.mode("overwrite").parquet(img_dir)
 
         def e2e_job() -> int:
@@ -210,51 +183,8 @@ def main() -> None:
             enc_imgs = encode_images(imgs.select("phash"))
             # the I2 cost-model row hint: at 8M rows x 56 cells this keeps the
             # zero-Python BNLJ (interleaved A/B: 3.4s vs stab's 4.2s); at 128M+
-            # the same call routes to the interval-stab path.  BENCH_PIP_STRATEGY
-            # pins a strategy for scaling A/B experiments.
-            strat = os.environ.get("BENCH_PIP_STRATEGY", "auto")
-            pip_kw: dict = dict(n_rows=N_IMAGES, strategy=strat)
-            # the 100-TB arms (layer side too big to broadcast): shuffled
-            # ancestor equi-join, optionally salted against hot-cell skew
-            if strat == "ancestor_shuffled":
-                pip_kw.update(strategy="ancestor", broadcast_cells=False)
-            elif strat == "ancestor_salted":
-                pip_kw.update(
-                    strategy="ancestor",
-                    broadcast_cells=False,
-                    salt=int(os.environ.get("BENCH_PIP_SALT", "8")),
-                )
-            elif strat == "prefix_shuffled":
-                pip_kw.update(strategy="prefix", broadcast_cells=False)
-                lvl = os.environ.get("BENCH_PREFIX_LEVEL")
-                if lvl:
-                    pip_kw.update(prefix_level=int(lvl))
-            elif strat == "prefix_salted":
-                pip_kw.update(
-                    strategy="prefix",
-                    broadcast_cells=False,
-                    salt=int(os.environ.get("BENCH_PIP_SALT", "8")),
-                )
-            elif strat in ("prefix_dist", "prefix_dist_bloom"):
-                # the fully distributed arm: executor-built covering frame,
-                # native prefix replication; probe prune = the auto rung
-                # (IN-set/semi) or, for the _bloom leg, the terminal
-                # fixed-size Bloom-bitmap rung forced explicitly
-                from __spark_entry__ import ALL_LAYER_SPECS
-                from s2_geometry_library_java_spark.operators.covering import (
-                    covering_df_distributed,
-                )
-
-                cover = covering_df_distributed(
-                    spark, ALL_LAYER_SPECS, max_cells=8, max_level=12
-                )
-                pip_kw = dict(covering_frame=cover)
-                if strat == "prefix_dist_bloom":
-                    pip_kw.update(prune="bloom")
-                lvl = os.environ.get("BENCH_PREFIX_LEVEL")
-                if lvl:
-                    pip_kw.update(prefix_level=int(lvl))
-            m = pip_join(enc_imgs, ALL_LAYERS, **pip_kw)
+            # the same call routes to the interval-stab path.
+            m = pip_join(enc_imgs, ALL_LAYERS, n_rows=N_IMAGES)
             return tile_manifest(m, tile_level=7).count()
 
         # 5 warmups: the BNLJ codegen loop keeps improving through ~5 executions
@@ -321,11 +251,11 @@ def main() -> None:
         # pip_join_salted gates), and the fully distributed covering arm
         timed(
             "pip_join_prefix",
-            lambda: pip_join(enc, ALL_LAYERS, broadcast_cells=False).count(),
+            lambda: pip_join(enc, ALL_LAYERS, strategy="prefix").count(),
         )
         timed(
             "pip_join_salted",
-            lambda: pip_join(enc, ALL_LAYERS, broadcast_cells=False, salt=4).count(),
+            lambda: pip_join(enc, ALL_LAYERS, strategy="prefix", salt=4).count(),
         )
 
         from __spark_entry__ import ALL_LAYER_SPECS

@@ -9,7 +9,7 @@ from s2_geometry_library_java_spark.operators.layers import (
     polygon_layer,
 )
 from s2_geometry_library_java_spark.operators.covering import covering_rows, covering_df
-from s2_geometry_library_java_spark.operators.pip_join import pip_join, assign_candidates, refine_candidates
+from s2_geometry_library_java_spark.operators.pip_join import pip_join, refine_candidates
 from s2_geometry_library_java_spark.operators.tiling import assign_tiles, tile_manifest, run_tiled_write
 from s2_geometry_library_java_spark.operators.knn import knn_join
 
@@ -22,7 +22,6 @@ __all__ = [
     "covering_rows",
     "covering_df",
     "pip_join",
-    "assign_candidates",
     "refine_candidates",
     "assign_tiles",
     "tile_manifest",

@@ -1,17 +1,26 @@
 """The spatial assign/refine join: point-in-region at DataFrame scale.
 
-Two candidate-generation strategies, both images of reference index queries:
+Three candidate-generation arms, each an image of S2CellUnion.contains
+(S2CellUnion.java:160-178) over the covering's [range_min, range_max]
+intervals, picked by ``pip_join(strategy=...)``:
 
-- **ancestor equi-join** (default): explode each point's ancestors at the
-  covering layer's distinct levels (a bounded <=30-way fan-out, pure native
-  bit math) and equi-join on cell_id — the "check all parent cells" trick of
-  S2EdgeIndex.getEdgesInParentCells (S2EdgeIndex.java:422-441) turned into a
-  shuffle-friendly, salt-able equi-join.  Broadcast-covering form only in
-  practice: for the beyond-broadcast regime the explode's |levels|x probe
-  amplification is the dominant shuffle cost, so "auto" routes there to the
-  PREFIX strategy instead.
+- **range** (``range_candidates``): ``biased(cell_id) BETWEEN
+  biased(range_min) AND biased(range_max)`` against a broadcast covering,
+  with the unsigned-compare bias of S2CellId.java:897-899.
+  Broadcast-only: Catalyst executes a non-equi join as BNLJ, which is fine
+  for a small layer side and wrong otherwise.
 
-- **prefix-partitioned interval join** (``strategy="prefix"``, the 100-TB
+- **interval-stab** (``stab_candidates``): the same binary search, *actually
+  executed as a binary search*: the covering's disjoint-per-layer
+  [range_min, range_max] intervals are flattened driver-side into a sorted
+  boundary array whose segments each carry the set of covering rows
+  containing them; one vectorized ``np.searchsorted`` per fact batch maps
+  each leaf id to its segment (an int32), and a broadcast equi-join on the
+  segment id expands to candidates.  O(log B) per row instead of the BNLJ's
+  O(B), and no fact-side row amplification.  No shuffle, so hot cells
+  cannot skew anything.  Broadcast-only like "range".
+
+- **prefix-partitioned interval join** (``prefix_candidates``, the 100-TB
   arm, auto-chosen whenever the covering must not be broadcast): one
   level-A ancestor key per probe row (no fan-out), covering replicated to
   the same prefixes, shuffled hash equi-join on the packed BIGINT prefix
@@ -19,32 +28,10 @@ Two candidate-generation strategies, both images of reference index queries:
   pre-shuffle prune of probe rows outside every covering prefix (IN-set
   literal while small, broadcast left-semi beyond, fixed-size Bloom
   bitmap once the exact prefix set itself outgrows a comfortable
-  broadcast).  Two forms:
-  ``prefix_candidates`` takes the driver-resident covering list;
-  ``prefix_candidates_df`` (``pip_join(covering_frame=...)``) takes a
-  covering DataFrame — e.g. built on executors by covering_df_distributed —
-  and keeps replication + pruning entirely DataFrame-native for huge layer
-  dimensions.
-
-- **range join**: ``biased(cell_id) BETWEEN biased(range_min) AND
-  biased(range_max)`` against a broadcast covering — literally
-  S2CellUnion.contains (S2CellUnion.java:160-178) with the unsigned-compare
-  bias of S2CellId.java:897-899.  Broadcast-only: Catalyst executes a
-  non-equi join as BNLJ, which is fine for a small layer side and wrong
-  otherwise.
-
-- **interval-stab** (``strategy="stab"``): the same S2CellUnion.contains
-  binary search (S2CellUnion.java:160-178), but *actually executed as a
-  binary search*: the covering's disjoint-per-layer [range_min, range_max]
-  intervals are flattened driver-side into a sorted boundary array whose
-  segments each carry the set of covering rows containing them; one
-  vectorized ``np.searchsorted`` per fact batch maps each leaf id to its
-  segment (an int32), and a broadcast equi-join on the segment id expands
-  to candidates.  Compared to the ancestor explode this moves ~|levels|x
-  row amplification of the WHOLE fact side (the dominant memory-bandwidth
-  cost at 10^8+ rows) into an O(log B) in-cache lookup; compared to the
-  BNLJ range join it is O(log B) instead of O(B) per row.  No shuffle, so
-  hot cells cannot skew anything.  Broadcast-only like "range".
+  broadcast).  The covering is either the driver-resident list or a
+  COVERING_SCHEMA DataFrame (``pip_join(covering_frame=...)``, e.g. built
+  on executors by covering_df_distributed), whose replication and pruning
+  then stay DataFrame-native.
 
 Refinement then applies the exact membership predicate only to candidates
 from non-interior covering cells (O5): natively for rect/cap layers, through
@@ -64,9 +51,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, IntegerType, LongType, StructField, StructType
 
-from s2_geometry_library_java_spark.functions.native import ancestors_expr, biased, parent_expr
+from s2_geometry_library_java_spark.functions.native import biased, parent_expr
 from s2_geometry_library_java_spark.functions.udfs import s2_cell_id
-from s2_geometry_library_java_spark.operators.covering import covering_df, covering_levels, covering_rows, COVERING_SCHEMA
+from s2_geometry_library_java_spark.kernel import cellid as ck
+from s2_geometry_library_java_spark.operators.covering import covering_rows, COVERING_SCHEMA
 from s2_geometry_library_java_spark.operators.layers import Layer
 
 
@@ -85,90 +73,22 @@ def with_cell_id(points: DataFrame, lat_col: str = "lat", lng_col: str = "lng", 
     )
 
 
-def assign_candidates(
-    points: DataFrame,
-    polygon_cells: DataFrame,
-    levels: list[int],
-    cell_col: str = "cell_id",
-    strategy: str = "ancestor",
-    broadcast_cells: bool = True,
-    salt: int | None = None,
-) -> DataFrame:
-    """Candidate (point, polygon) pairs; keeps all point columns plus
-    ``polygon_id`` and ``is_interior``."""
-    cells = polygon_cells.select(
+def range_candidates(points: DataFrame, rows: list[tuple], cell_col: str = "cell_id") -> DataFrame:
+    """Candidate (point, polygon) pairs via the broadcast BETWEEN join;
+    keeps all point columns plus ``polygon_id`` and ``is_interior``."""
+    cells = points.sparkSession.createDataFrame(rows, COVERING_SCHEMA).select(
         F.col("polygon_id"),
-        F.col("cell_id").alias("_cover_cell"),
         F.col("range_min").alias("_rmin"),
         F.col("range_max").alias("_rmax"),
         F.col("is_interior"),
     )
-
-    if strategy == "ancestor":
-        pts = points.withColumn("_anc", F.explode(ancestors_expr(F.col(cell_col), levels)))
-        if salt and not broadcast_cells:
-            # Replicate the (small) covering side across salt buckets and
-            # spread each hot covering cell's probes over them — skew
-            # mitigation for shuffled joins (SURVEY.md §4 O15).  The probe
-            # salt hashes the *leaf* id, which varies within a hot covering
-            # cell, so one hot key fans out over `salt` reducers.
-            #
-            # The salt is PACKED into the join key, not joined as a second
-            # column: a covering cell at level L has all-zero bits below its
-            # lsb (bit 2*(30-L)), so for levels <= 28 the low 3 bits are
-            # free and `anc | salt` keeps distinct (cell, salt) pairs
-            # distinct.  This keeps the SMJ key a single BIGINT — eligible
-            # for Spark's radix sort, which only applies to single-column
-            # sorts; the compound (_anc, _psalt) key measured 2-3x slower
-            # on the 104M-row probe sort (r4 interleaved A/B, 8M corpus:
-            # 2.7-3.5s single-key vs 6.1-9.0s compound).
-            free_bits = 2 * (30 - max(levels)) if levels else 60
-            if salt > (1 << free_bits):
-                raise ValueError(
-                    f"salt {salt} does not fit in the {free_bits} zero bits "
-                    f"below the deepest covering level {max(levels)}'s lsb; "
-                    f"lower the salt or the covering depth"
-                )
-            cells = cells.withColumn(
-                "_csalt", F.explode(F.array(*[F.lit(s) for s in range(salt)]))
-            ).withColumn("_ckey", F.col("_cover_cell").bitwiseOR(F.col("_csalt")))
-            pts = pts.withColumn(
-                "_pkey",
-                F.col("_anc").bitwiseOR(
-                    F.pmod(F.xxhash64(F.col(cell_col)), F.lit(salt))
-                ),
-            )
-            join_on = pts["_pkey"] == cells["_ckey"]
-        else:
-            join_on = pts["_anc"] == cells["_cover_cell"]
-        # Non-broadcast path: force a shuffled HASH join with the covering as
-        # the build side.  The default SMJ would SORT the exploded probe side
-        # (|levels| x fact rows — 1.66B rows at the 128M bench), which spills
-        # and dominates the leg: measured at 128M/32 cores the SMJ leg ran
-        # >600 s/rep vs 177.7 s with the hint (single-rep probe, r4).  Even
-        # hash-joined, the explode itself shuffles |levels|x the fact side —
-        # which is why "auto" routes non-broadcast requests to the PREFIX
-        # strategy below (one compact key per probe row) and this arm is kept
-        # only as the A/B comparison point.
-        right = F.broadcast(cells) if broadcast_cells else cells.hint("shuffle_hash")
-        out = pts.join(right, join_on, "inner")
-        return out.drop(
-            "_anc", "_cover_cell", "_rmin", "_rmax", "_psalt", "_csalt", "_pkey", "_ckey"
-        )
-
-    if strategy == "prefix":
-        raise ValueError("strategy='prefix' routes through prefix_candidates, not assign_candidates")
-
-    if strategy == "range":
-        b = biased(F.col(cell_col))
-        out = points.join(
-            F.broadcast(cells),
-            (b >= biased(F.col("_rmin"))) & (b <= biased(F.col("_rmax"))),
-            "inner",
-        )
-        return out.drop("_cover_cell", "_rmin", "_rmax")
-
-    raise ValueError(f"unknown strategy {strategy!r}")
+    b = biased(F.col(cell_col))
+    out = points.join(
+        F.broadcast(cells),
+        (b >= biased(F.col("_rmin"))) & (b <= biased(F.col("_rmax"))),
+        "inner",
+    )
+    return out.drop("_rmin", "_rmax")
 
 
 _U64_BIAS = np.uint64(1) << np.uint64(63)
@@ -204,31 +124,59 @@ def _stab_structure(rows: list[tuple]) -> tuple[np.ndarray, list[tuple]]:
     return bounds, seg_rows
 
 
+_CELL_SEG_TYPE = StructType(
+    [StructField("cell", LongType(), False), StructField("seg", IntegerType(), False)]
+)
+
+
 def stab_candidates(
     points: DataFrame,
     covering: list[tuple],
+    lat_col: str = "lat",
+    lng_col: str = "lng",
     cell_col: str = "cell_id",
 ) -> DataFrame:
     """Candidate pairs via the vectorized S2CellUnion.contains binary search
     (see module docstring).  Keeps all point columns plus ``polygon_id`` and
     ``is_interior``; points outside every covering interval drop out in the
-    broadcast equi-join (inner, same semantics as the other strategies)."""
+    broadcast equi-join (inner, same semantics as the other strategies).
+
+    Pre-encoded points (``cell_col`` present) pay one 8 B-in / 4 B-out
+    ``seg_of`` hop on the existing id.  Un-encoded points pay a single
+    ``cell_seg`` struct hop that returns (cell_id, segment) together instead
+    of encode-hop + seg-hop (same kernel, same searchsorted)."""
     bounds, seg_rows = _stab_structure(covering)
 
-    @pandas_udf(IntegerType())
-    def seg_of(cid: pd.Series) -> pd.Series:
-        b = cid.to_numpy(dtype=np.int64).view(np.uint64) ^ _U64_BIAS
-        seg = np.searchsorted(bounds, b, side="right") - 1
-        return pd.Series(seg.astype(np.int32))
+    if cell_col in points.columns:
+        @pandas_udf(IntegerType())
+        def seg_of(cid: pd.Series) -> pd.Series:
+            b = cid.to_numpy(dtype=np.int64).view(np.uint64) ^ _U64_BIAS
+            seg = np.searchsorted(bounds, b, side="right") - 1
+            return pd.Series(seg.astype(np.int32))
 
-    spark = points.sparkSession
-    seg_df = spark.createDataFrame(
+        # coalesce marks _seg non-null so the join's inferred IsNotNull doesn't
+        # re-evaluate the UDF (same Catalyst trap as with_cell_id).
+        pts = points.withColumn(
+            "_seg", F.coalesce(seg_of(F.col(cell_col)), F.lit(-1))
+        )
+    else:
+        @pandas_udf(_CELL_SEG_TYPE)
+        def cell_seg(lat_s: pd.Series, lng_s: pd.Series) -> pd.DataFrame:
+            ids = ck.from_latlng_degrees(
+                lat_s.to_numpy(dtype=np.float64), lng_s.to_numpy(dtype=np.float64)
+            )
+            seg = np.searchsorted(bounds, ids ^ _U64_BIAS, side="right") - 1
+            return pd.DataFrame({"cell": ids.view(np.int64), "seg": seg.astype(np.int32)})
+
+        pts = (
+            points.withColumn("_cs", cell_seg(F.col(lat_col), F.col(lng_col)))
+            .withColumn(cell_col, F.col("_cs.cell"))
+            # coalesce marks the join key non-null (see with_cell_id)
+            .withColumn("_seg", F.coalesce(F.col("_cs.seg"), F.lit(-1)))
+            .drop("_cs")
+        )
+    seg_df = points.sparkSession.createDataFrame(
         seg_rows, "_seg int, polygon_id string, is_interior boolean"
-    )
-    # coalesce marks _seg non-null so the join's inferred IsNotNull doesn't
-    # re-evaluate the UDF (same Catalyst trap as with_cell_id).
-    pts = points.withColumn(
-        "_seg", F.coalesce(seg_of(F.col(cell_col)), F.lit(-1))
     )
     return pts.join(F.broadcast(seg_df), "_seg", "inner").drop("_seg")
 
@@ -321,87 +269,6 @@ def _prefix_cover_rows(rows: list[tuple], prefix_level: int) -> list[tuple]:
             for i in range(lsb // lsb_a):
                 out.append((first + i * step, pid, rmin, rmax, interior))
     return out
-
-
-def prefix_candidates(
-    points: DataFrame,
-    rows: list[tuple],
-    cell_col: str = "cell_id",
-    salt: int | None = None,
-    prefix_level: int | None = None,
-) -> DataFrame:
-    """Candidate pairs via the PREFIX-PARTITIONED interval join — the
-    100-TB arm when the layer side is too big to broadcast.
-
-    The ancestor explode (assign_candidates) shuffles |levels| x the fact
-    side (1.66 B rows at the 128M bench -> 177.7 s even hash-joined); this
-    strategy shuffles the fact side ONCE, compactly: each probe row gets a
-    single level-A ancestor key (native bit math, no fan-out), the covering
-    is replicated driver-side to the same level-A prefixes
-    (_prefix_cover_rows), and the two meet in a shuffled HASH equi-join on
-    the packed BIGINT prefix with the exact interval containment
-    ``biased(cell) BETWEEN biased(range_min) AND biased(range_max)``
-    (S2CellUnion.contains, S2CellUnion.java:160-178) as the residual join
-    condition.  Because the covering prefix set is known driver-side, probe
-    rows outside every covering prefix are dropped BEFORE the shuffle by a
-    codegen'd IN-set filter — at cluster scale with a distributed covering
-    the same pruning is a runtime bloom-filter join.
-
-    ``prefix_level`` trades reducer-key cardinality (6*4^A populated cells
-    max) against coarse-cell replication (4^(A-L) per covering cell below
-    A); 4 suits local[32], 6-8 a 1000-executor cluster — when None it is
-    derived from spark.sql.shuffle.partitions (choose_prefix_level), so the
-    same call scales from the laptop to the cluster.  ``salt`` spreads a
-    hot prefix (a city-sized layer stack) over ``salt`` reducers by packing
-    ``xxhash64(leaf) % salt`` into the prefix's zero low bits — the key
-    stays a single radix-sortable BIGINT exactly as in assign_candidates."""
-    if prefix_level is None:
-        try:
-            parts = int(points.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):  # e.g. "auto" under some AQE configs
-            parts = 200
-        prefix_level = choose_prefix_level(parts)
-    _validate_prefix_level(prefix_level)
-    if salt and salt > (1 << (2 * (30 - prefix_level))):
-        raise ValueError(f"salt {salt} does not fit below the level-{prefix_level} lsb")
-    pref_rows = _prefix_cover_rows(rows, prefix_level)
-    prefixes = sorted({r[0] for r in pref_rows})
-
-    spark = points.sparkSession
-    pts = points.withColumn("_pfx", parent_expr(F.col(cell_col), prefix_level))
-    if len(prefixes) <= PREFIX_IN_FILTER_MAX:
-        pts = pts.filter(F.col("_pfx").isin(prefixes))
-    else:
-        # middle rung past the IN-set band: broadcast left-semi on the
-        # distinct prefixes — same pre-shuffle pruning, no literal blowup
-        key_df = spark.createDataFrame(((p,) for p in prefixes), "_pfx bigint")
-        pts = pts.join(F.broadcast(key_df), "_pfx", "left_semi")
-    if salt:
-        cover = [
-            (pfx | s, pid, rmin, rmax, interior)
-            for (pfx, pid, rmin, rmax, interior) in pref_rows
-            for s in range(salt)
-        ]
-        pts = pts.withColumn(
-            "_pkey",
-            F.col("_pfx").bitwiseOR(F.pmod(F.xxhash64(F.col(cell_col)), F.lit(salt))),
-        )
-    else:
-        cover = pref_rows
-        pts = pts.withColumn("_pkey", F.col("_pfx"))
-    cover_df = spark.createDataFrame(
-        cover,
-        "_ckey bigint, polygon_id string, _rmin bigint, _rmax bigint, is_interior boolean",
-    )
-    b = biased(pts[cell_col])
-    out = pts.join(
-        cover_df.hint("shuffle_hash"),
-        (pts["_pkey"] == cover_df["_ckey"])
-        & (b >= biased(cover_df["_rmin"]))
-        & (b <= biased(cover_df["_rmax"])),
-        "inner",
-    )
-    return out.drop("_pfx", "_pkey", "_ckey", "_rmin", "_rmax")
 
 
 def prefix_cover_frame(cover: DataFrame, prefix_level: int) -> DataFrame:
@@ -508,97 +375,121 @@ def bloom_prune(
     return out
 
 
-def prefix_candidates_df(
+def prefix_candidates(
     points: DataFrame,
-    cover: DataFrame,
+    cover: list[tuple] | DataFrame,
     cell_col: str = "cell_id",
     salt: int | None = None,
     prefix_level: int | None = None,
     prune: str = "auto",
 ) -> DataFrame:
-    """The prefix-partitioned interval join with a DataFrame covering — the
-    fully distributed 100-TB arm.
+    """Candidate pairs via the PREFIX-PARTITIONED interval join — the
+    100-TB arm when the layer side is too big to broadcast.
 
-    Same join shape as ``prefix_candidates`` (one compact level-A ancestor
-    key per probe row, shuffled hash equi-join, exact interval containment
-    residual, optional packed-bit salt), but the covering side is a
-    DataFrame in COVERING_SCHEMA shape — e.g. the executor-built output of
-    ``covering_df_distributed`` — so a 100k-layer dimension never touches
-    driver Python: prefix replication runs as native ``sequence``/``explode``
-    (prefix_cover_frame), and nothing about the covering's SIZE ever does.
+    The fact side is shuffled ONCE, compactly: each probe row gets a single
+    level-A ancestor key (native bit math, no fan-out), the covering is
+    replicated to the same level-A prefixes, and the two meet in a shuffled
+    HASH equi-join on the packed BIGINT prefix with the exact interval
+    containment ``biased(cell) BETWEEN biased(range_min) AND
+    biased(range_max)`` (S2CellUnion.contains, S2CellUnion.java:160-178) as
+    the residual join condition.
+
+    ``cover`` is either the driver-side covering list (replicated by
+    ``_prefix_cover_rows``) or a COVERING_SCHEMA DataFrame — e.g. the
+    executor-built output of ``covering_df_distributed`` — replicated by
+    native ``sequence``/``explode`` (``prefix_cover_frame``) so a 100k-layer
+    dimension never touches driver Python.  Everything after that is shared.
+
+    ``prefix_level`` trades reducer-key cardinality (6*4^A populated cells
+    max) against coarse-cell replication (4^(A-L) per covering cell below
+    A); 4 suits local[32], 6-8 a 1000-executor cluster — when None it is
+    derived from spark.sql.shuffle.partitions (choose_prefix_level), so the
+    same call scales from the laptop to the cluster.  ``salt`` spreads a
+    hot prefix (a city-sized layer stack) over ``salt`` reducers by packing
+    ``xxhash64(leaf) % salt`` into the prefix's zero low bits: the key stays
+    a single BIGINT, eligible for Spark's single-column radix sort (a
+    compound (key, salt) join key measured 2-3x slower on the 104M-row
+    probe sort, r4 interleaved A/B).
 
     ``prune`` picks how probe rows outside every covering prefix are dropped
-    before the shuffle (the pre-exchange pruning both rungs share):
+    before the shuffle (every rung executes on the probe scan stage):
 
-    - ``"auto"`` (default): run one small bounded job on the DIMENSION side
-      at construction time — ``distinct prefixes LIMIT PREFIX_IN_FILTER_MAX+1``
-      — and, when the covering has at most PREFIX_IN_FILTER_MAX distinct
-      prefixes, prune with the same codegen'd IN-set literal as the
-      driver-list arm (measured ~1.3 s cheaper than the semi probe per 128M
-      fact rows at local[32]); above the bound, a second bounded count
-      (``LIMIT PREFIX_SEMI_PRUNE_MAX+1``) picks between the broadcast semi
-      (exact set still cheap to broadcast) and the Bloom rung (fixed-size
-      bitmap, cardinality-independent).  The jobs are bounded by their
-      LIMITs regardless of covering size, and ``cover`` is persisted first
-      so the coverer executes once, not once per consumer.  NOTE this
-      executes (dimension-side, bounded) Spark jobs eagerly when the
-      DataFrame is CONSTRUCTED, not when it is acted on — callers that need
+    - ``"auto"`` (default): by the number of distinct covering prefixes, a
+      codegen'd IN-set literal up to PREFIX_IN_FILTER_MAX (measured ~1.3 s
+      cheaper than the semi probe per 128M fact rows at local[32]), the
+      broadcast semi up to PREFIX_SEMI_PRUNE_MAX, the Bloom rung beyond.  A
+      driver list already knows its prefixes, so this runs no Spark job.  A
+      DataFrame covering is persisted first (so the coverer executes once,
+      not once per consumer) and counted by one or two small jobs bounded by
+      their LIMITs — ``distinct prefixes LIMIT PREFIX_IN_FILTER_MAX+1``, then
+      a count up to ``PREFIX_SEMI_PRUNE_MAX+1`` — that run eagerly when the
+      DataFrame is CONSTRUCTED, not when it is acted on; callers that need
       a fully lazy plan pass ``prune="semi"`` or ``prune="bloom"``.
-    - ``"semi"``: fully lazy — probe pruning is a broadcast LEFT SEMI join
-      on the distinct prefixes (no literal IN list at any covering size, no
-      job until the first action).  The semi prune consumes the covering
+    - ``"semi"``: probe pruning is a broadcast LEFT SEMI join on the
+      distinct prefixes (no literal IN list at any covering size, no job
+      until the first action).  The semi prune consumes the covering
       subtree a second time (distinct keys + join build side); when the
       covering is expensive to build (applyInPandas coverer over many
       layers), persist or checkpoint ``cover`` before calling — the frame
       is small (the layer dimension), so caching it is the cluster-scale
       posture anyway.
-    - ``"bloom"``: fully lazy — probe pruning is a PREFIX_BLOOM_BITS-bit
-      Bloom bitmap of the covering prefixes (bloom_bitmap / bloom_prune):
-      k broadcast word-lookups + bit tests on the probe scan stage.  The
-      broadcast is ≤ m/64 longs NO MATTER how many distinct prefixes the
-      covering has — the terminal rung for layer dimensions whose exact
-      prefix set itself outgrows a broadcast; false positives (≈3% at the
-      6.3M worst-case prefix bound) only add shuffle bytes, never rows to
-      the output.  Same persist advice as ``"semi"`` (the bitmap consumes
-      the covering subtree once more)."""
+    - ``"bloom"``: probe pruning is a PREFIX_BLOOM_BITS-bit Bloom bitmap of
+      the covering prefixes (bloom_bitmap / bloom_prune): k broadcast
+      word-lookups + bit tests.  The broadcast is ≤ m/64 longs NO MATTER
+      how many distinct prefixes the covering has — the terminal rung for
+      layer dimensions whose exact prefix set itself outgrows a broadcast;
+      false positives (≈3% at the 6.3M worst-case prefix bound) only add
+      shuffle bytes, never rows to the output.  Same persist advice as
+      ``"semi"`` (the bitmap consumes the covering subtree once more)."""
     if prune not in ("auto", "semi", "bloom"):
         raise ValueError(f"prune must be 'auto', 'semi' or 'bloom', got {prune!r}")
+    spark = points.sparkSession
     if prefix_level is None:
         try:
-            parts = int(points.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
+            parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        except (TypeError, ValueError):  # e.g. "auto" under some AQE configs
             parts = 200
         prefix_level = choose_prefix_level(parts)
     _validate_prefix_level(prefix_level)
     if salt and salt > (1 << (2 * (30 - prefix_level))):
         raise ValueError(f"salt {salt} does not fit below the level-{prefix_level} lsb")
 
-    if prune == "auto":
-        # dimension-side only and bounded by the LIMIT — safe at any fact
-        # scale; persist so the probe-prune probe and the join build side
-        # share one covering execution (the collect materializes the cache)
-        cover = cover.persist()
-    pref = prefix_cover_frame(cover, prefix_level)
-    pts = points.withColumn("_pfx", parent_expr(F.col(cell_col), prefix_level))
-    inset_keys: list[int] | None = None
+    if isinstance(cover, DataFrame):
+        if prune == "auto":
+            # dimension-side only and bounded by the LIMIT — safe at any fact
+            # scale; persist so the rung probe and the join build side share
+            # one covering execution (the collect materializes the cache)
+            cover = cover.persist()
+        pref = prefix_cover_frame(cover, prefix_level)
+        if prune == "auto":
+            distinct = pref.select("_pfx").distinct()
+            keys = [r["_pfx"] for r in distinct.limit(PREFIX_IN_FILTER_MAX + 1).collect()]
+            # second bounded job only past the IN-set band: count (not
+            # collect) caps at the LIMIT, deciding semi vs bloom
+            n_keys = len(keys)
+            if n_keys > PREFIX_IN_FILTER_MAX:
+                n_keys = distinct.limit(PREFIX_SEMI_PRUNE_MAX + 1).count()
+    else:
+        pref_rows = _prefix_cover_rows(cover, prefix_level)
+        pref = spark.createDataFrame(
+            pref_rows, "_pfx bigint, polygon_id string, _rmin bigint, _rmax bigint, is_interior boolean"
+        )
+        keys = list({r[0] for r in pref_rows})
+        n_keys = len(keys)
+
     rung = prune
     if prune == "auto":
-        sample = pref.select("_pfx").distinct().limit(PREFIX_IN_FILTER_MAX + 1).collect()
-        if len(sample) <= PREFIX_IN_FILTER_MAX:
-            inset_keys = sorted(r["_pfx"] for r in sample)
-        else:
-            # second bounded dimension-side job: count (not collect) caps at
-            # the LIMIT, deciding semi vs bloom without materializing keys
-            n_keys = (
-                pref.select("_pfx").distinct().limit(PREFIX_SEMI_PRUNE_MAX + 1).count()
-            )
-            rung = "semi" if n_keys <= PREFIX_SEMI_PRUNE_MAX else "bloom"
-    if inset_keys is not None:
-        # same codegen'd IN-set filter as the driver-list arm's small band
-        pts = pts.filter(F.col("_pfx").isin(inset_keys))
+        rung = (
+            "inset" if n_keys <= PREFIX_IN_FILTER_MAX
+            else "semi" if n_keys <= PREFIX_SEMI_PRUNE_MAX
+            else "bloom"
+        )
+    pts = points.withColumn("_pfx", parent_expr(F.col(cell_col), prefix_level))
+    if rung == "inset":
+        pts = pts.filter(F.col("_pfx").isin(sorted(keys)))
     elif rung == "semi":
-        # pre-shuffle probe prune: rows outside every covering prefix never
-        # enter the exchange (broadcast semi executes on the probe scan stage)
+        # middle rung past the IN-set band: broadcast left-semi on the
+        # distinct prefixes — same pre-shuffle pruning, no literal blowup
         pts = pts.join(F.broadcast(pref.select("_pfx").distinct()), "_pfx", "left_semi")
     else:
         # terminal rung: fixed-size Bloom bitmap of the covering prefixes —
@@ -762,9 +653,7 @@ RANGE_WORK_BUDGET = 4_000_000_000
 STAB_MAX_CELLS = 65536
 
 
-def choose_strategy(
-    covering: list[tuple], levels: list[int], n_rows: int | None = None
-) -> str:
+def choose_strategy(covering: list[tuple], n_rows: int | None = None) -> str:
     """Adaptive plan choice — the engine analog of S2EdgeIndex's lazy-build
     cost model (S2EdgeIndex.java:156-211: brute force until >100 edges and
     >30 queries make the index pay for itself).  Like the reference's
@@ -782,7 +671,7 @@ def choose_strategy(
     over RANGE_BREAKEVEN_CELLS assume web-scale rows and take stab.
     Non-broadcastable coverings (huge layer dimensions) must use the
     prefix-partitioned interval join — forced by the caller via
-    broadcast_cells=False, or chosen here when the covering outgrows what a
+    ``strategy="prefix"``, or chosen here when the covering outgrows what a
     broadcast segment table should hold."""
     n_cells = len(covering)
     if n_cells > STAB_MAX_CELLS:
@@ -792,48 +681,6 @@ def choose_strategy(
     return "range" if n_cells <= RANGE_BREAKEVEN_CELLS else "stab"
 
 
-_CELL_SEG_TYPE = StructType(
-    [StructField("cell", LongType(), False), StructField("seg", IntegerType(), False)]
-)
-
-
-def stab_candidates_fused(
-    points: DataFrame,
-    covering: list[tuple],
-    lat_col: str = "lat",
-    lng_col: str = "lng",
-    cell_col: str = "cell_id",
-) -> DataFrame:
-    """Encode + interval-stab in ONE Arrow hop: a struct UDF returns
-    (cell_id, segment) together, so un-encoded points pay a single Python
-    round trip instead of encode-hop + seg-hop.  Identical results to
-    with_cell_id + stab_candidates (same kernel, same searchsorted)."""
-    from s2_geometry_library_java_spark.kernel import cellid as ck
-
-    bounds, seg_rows = _stab_structure(covering)
-
-    @pandas_udf(_CELL_SEG_TYPE)
-    def cell_seg(lat_s: pd.Series, lng_s: pd.Series) -> pd.DataFrame:
-        ids = ck.from_latlng_degrees(
-            lat_s.to_numpy(dtype=np.float64), lng_s.to_numpy(dtype=np.float64)
-        )
-        seg = np.searchsorted(bounds, ids ^ _U64_BIAS, side="right") - 1
-        return pd.DataFrame({"cell": ids.view(np.int64), "seg": seg.astype(np.int32)})
-
-    spark = points.sparkSession
-    seg_df = spark.createDataFrame(
-        seg_rows, "_seg int, polygon_id string, is_interior boolean"
-    )
-    pts = (
-        points.withColumn("_cs", cell_seg(F.col(lat_col), F.col(lng_col)))
-        .withColumn(cell_col, F.col("_cs.cell"))
-        # coalesce marks the join key non-null (see with_cell_id)
-        .withColumn("_seg", F.coalesce(F.col("_cs.seg"), F.lit(-1)))
-        .drop("_cs")
-    )
-    return pts.join(F.broadcast(seg_df), "_seg", "inner").drop("_seg")
-
-
 def pip_join(
     points: DataFrame,
     layers: list[Layer],
@@ -841,20 +688,15 @@ def pip_join(
     lng_col: str = "lng",
     cell_col: str = "cell_id",
     max_cells: int = 8,
-    # max_level 12 (not 30): a deep single-child chain in a covering (legal
-    # coverer tunneling, S2RegionCoverer.java:480) would add one
-    # ancestor-explode row per extra level for EVERY fact row; boundary
-    # coarseness below level 12 is cheaper to absorb in the vectorized
-    # refine than per-row fan-out is in the join.  (Measured: constraining
-    # further — min_level=4/level_mod=2 — shrinks fan-out to 4 but the
-    # coarser boundary cells inflate refine work 3x; this config wins.)
+    # max_level 12 (not 30): boundary coarseness below level 12 is cheap to
+    # absorb in the vectorized refine.  (Measured: constraining further —
+    # min_level=4/level_mod=2 — coarsens the boundary cells and inflates
+    # refine work 3x; this config wins.)
     min_level: int = 0,
     max_level: int = 12,
     level_mod: int = 1,
     strategy: str = "auto",
-    broadcast_cells: bool = True,
     salt: int | None = None,
-    precomputed_cells: list[tuple] | None = None,
     n_rows: int | None = None,
     prefix_level: int | None = None,
     covering_frame: DataFrame | None = None,
@@ -862,56 +704,53 @@ def pip_join(
 ) -> DataFrame:
     """points x layers -> rows of points matched with ``polygon_id``.
 
-    ``strategy="auto"`` (default) applies the I2 cost model: coverings up to
-    the measured breakeven take the zero-Python broadcast range join, larger
-    broadcastable ones the vectorized interval-stab lookup; a shuffled or
-    salted request — or a covering too big to broadcast — takes the
-    prefix-partitioned interval join (range/stab are broadcast-only by
-    construction; the exploded-ancestor arm remains only as an explicit
-    ``strategy="ancestor"`` A/B point).  ``n_rows`` is an optional fact-side
-    row-count hint (exact or estimated) that lets the model keep small fact
-    tables on the range path above the cell breakeven; ``prefix_level``
-    overrides the shuffle-width-derived anchor level of the prefix join.
+    ``strategy`` is one of ``"auto"``, ``"range"``, ``"stab"`` and
+    ``"prefix"``.  ``"auto"`` (default) applies the I2 cost model
+    (choose_strategy): coverings up to the measured breakeven take the
+    zero-Python broadcast range join, larger broadcastable ones the
+    vectorized interval-stab lookup, and a covering too big to broadcast
+    the prefix-partitioned interval join.  ``n_rows`` is an optional
+    fact-side row-count hint (exact or estimated) that lets the model keep
+    small fact tables on the range path above the cell breakeven.
+
+    ``salt``, ``prefix_level`` and ``prune`` are prefix-join knobs (see
+    prefix_candidates): passing any of them makes ``"auto"`` take the
+    prefix join, and passing them with ``"range"`` or ``"stab"`` (both
+    broadcast-only by construction) raises ``ValueError``.
 
     ``covering_frame``: an already-built covering DataFrame in
     COVERING_SCHEMA shape (typically ``covering_df_distributed`` over a huge
     layer dimension, with coverer params matching this call's) — routes to
-    the fully distributed prefix arm (prefix_candidates_df): covering
-    replication and probe pruning stay DataFrame-native, nothing flows
-    through driver Python.  ``layers`` still supplies the exact refine
-    predicates.  ``prune`` (that arm only) picks the probe-prune rung —
-    ``"auto"`` bounded-collect IN-set→semi→bloom escalation / ``"semi"``
-    fully lazy broadcast semi / ``"bloom"`` fully lazy fixed-size Bloom
-    bitmap; see prefix_candidates_df."""
-    spark = points.sparkSession
+    the prefix join with covering replication and probe pruning kept
+    DataFrame-native, so nothing flows through driver Python.  ``layers``
+    still supplies the exact refine predicates."""
+    if strategy not in ("auto", "range", "stab", "prefix"):
+        raise ValueError(
+            f"strategy must be 'auto', 'range', 'stab' or 'prefix', got {strategy!r}"
+        )
+    if covering_frame is not None and strategy not in ("auto", "prefix"):
+        raise ValueError("covering_frame requires the prefix strategy")
+    given = {"salt": salt is not None, "prefix_level": prefix_level is not None, "prune": prune != "auto"}
+    prefix_knobs = [name for name, g in given.items() if g]
+    if prefix_knobs and strategy in ("range", "stab"):
+        raise ValueError(
+            f"{', '.join(prefix_knobs)} only apply to strategy='prefix', not {strategy!r}"
+        )
     if covering_frame is not None:
-        if strategy not in ("auto", "prefix"):
-            raise ValueError("covering_frame requires the prefix strategy")
-        pts = with_cell_id(points, lat_col, lng_col, cell_col)
-        cand = prefix_candidates_df(pts, covering_frame, cell_col, salt, prefix_level, prune)
-        return refine_candidates(cand, layers, lat_col, lng_col).drop("is_interior")
-    rows = precomputed_cells if precomputed_cells is not None else covering_rows(
-        layers, max_cells=max_cells, min_level=min_level, max_level=max_level, level_mod=level_mod
-    )
-    if strategy == "auto":
-        if salt or not broadcast_cells:
-            # beyond-broadcast layer side: the compact prefix-partitioned
-            # interval join, NOT the ancestor explode (13x the shuffle)
-            strategy = "prefix"
-        else:
-            strategy = choose_strategy(rows, covering_levels(rows), n_rows)
-    if strategy == "prefix":
-        pts = with_cell_id(points, lat_col, lng_col, cell_col)
-        cand = prefix_candidates(pts, rows, cell_col, salt, prefix_level)
-    elif strategy == "stab" and cell_col not in points.columns:
-        cand = stab_candidates_fused(points, rows, lat_col, lng_col, cell_col)
-    elif strategy == "stab":
-        cand = stab_candidates(points, rows, cell_col)
+        cover = covering_frame
+        strategy = "prefix"
+    else:
+        cover = covering_rows(
+            layers, max_cells=max_cells, min_level=min_level, max_level=max_level, level_mod=level_mod
+        )
+        if strategy == "auto":
+            strategy = "prefix" if prefix_knobs else choose_strategy(cover, n_rows)
+    if strategy == "stab":
+        cand = stab_candidates(points, cover, lat_col, lng_col, cell_col)
     else:
         pts = with_cell_id(points, lat_col, lng_col, cell_col)
-        cells_df = spark.createDataFrame(rows, COVERING_SCHEMA)
-        cand = assign_candidates(
-            pts, cells_df, covering_levels(rows), cell_col, strategy, broadcast_cells, salt
-        )
-    refined = refine_candidates(cand, layers, lat_col, lng_col)
-    return refined.drop("is_interior")
+        if strategy == "prefix":
+            cand = prefix_candidates(pts, cover, cell_col, salt, prefix_level, prune)
+        else:
+            cand = range_candidates(pts, cover, cell_col)
+    return refine_candidates(cand, layers, lat_col, lng_col).drop("is_interior")

@@ -47,28 +47,66 @@ def points_pdf(points):
     return points.toPandas()
 
 
-@pytest.mark.parametrize("strategy", ["ancestor", "range", "stab", "prefix"])
-def test_pip_join_matches_bruteforce(points, points_pdf, strategy):
+STRATEGIES = ["range", "stab", "prefix"]
+
+
+@pytest.mark.parametrize(
+    "strategy,encoded",
+    [pytest.param(s, False, id=s) for s in STRATEGIES]
+    + [pytest.param(s, True, id=f"{s}-pre_encoded") for s in STRATEGIES],
+)
+def test_pip_join_matches_bruteforce(points, points_pdf, strategy, encoded):
+    # pre-encoded input (cell_id already present) takes the seg_of stab hop
+    # instead of the fused encode+segment hop; raw input encodes in the join
     layers = make_layers()
-    result = pip_join(points, layers, strategy=strategy)
+    pts = with_cell_id(points) if encoded else points
+    result = pip_join(pts, layers, strategy=strategy)
     got = {(int(r["point_id"]), r["polygon_id"]) for r in result.select("point_id", "polygon_id").collect()}
     assert got == oracle_matches(points_pdf, layers)
 
 
 def test_pip_join_salted_shuffle_same_rows(points, points_pdf):
-    # broadcast_cells=False + salt routes auto -> salted PREFIX join
+    # salt routes auto -> salted PREFIX join
     layers = make_layers()
-    result = pip_join(points, layers, broadcast_cells=False, salt=4)
+    result = pip_join(points, layers, salt=4)
     got = {(int(r["point_id"]), r["polygon_id"]) for r in result.select("point_id", "polygon_id").collect()}
     assert got == oracle_matches(points_pdf, layers)
 
 
-def test_pip_join_ancestor_shuffled_same_rows(points, points_pdf):
-    # the explicit exploded-ancestor shuffle arm (kept for A/B) + salt
-    layers = make_layers()
-    result = pip_join(points, layers, strategy="ancestor", broadcast_cells=False, salt=4)
-    got = {(int(r["point_id"]), r["polygon_id"]) for r in result.select("point_id", "polygon_id").collect()}
-    assert got == oracle_matches(points_pdf, layers)
+@pytest.mark.parametrize("strategy", ["ancestor", "broadcast", "", "PREFIX"])
+def test_pip_join_rejects_unknown_strategy(points, strategy):
+    with pytest.raises(ValueError, match="'auto', 'range', 'stab' or 'prefix'"):
+        pip_join(points, make_layers(), strategy=strategy)
+
+
+@pytest.mark.parametrize("strategy", ["range", "stab"])
+@pytest.mark.parametrize(
+    "knob",
+    [{"salt": 4}, {"prefix_level": 4}, {"prune": "semi"}, {"prune": "bloom"}],
+    ids=["salt", "prefix_level", "prune_semi", "prune_bloom"],
+)
+def test_pip_join_rejects_prefix_knobs_on_broadcast_arms(points, strategy, knob):
+    # range/stab are broadcast-only: a salt, anchor level or prune rung
+    # would be silently dropped, so passing one is an error
+    with pytest.raises(ValueError, match=f"{next(iter(knob))} only apply to strategy='prefix'"):
+        pip_join(points, make_layers(), strategy=strategy, **knob)
+
+
+def test_prefix_join_from_driver_list_runs_no_job_at_construction(spark, points):
+    """The driver-list prefix arm already knows its distinct prefixes, so
+    picking the prune rung must not start a Spark job (unlike a covering
+    DataFrame, which needs a bounded dimension-side count)."""
+    from __spark_entry__ import ALL_LAYERS
+
+    sc = spark.sparkContext
+    group = "prefix-list-construction"
+    sc.setJobGroup(group, "pip_join construction only")
+    try:
+        pip_join(points, ALL_LAYERS, strategy="prefix")
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
 
 
 @pytest.mark.parametrize("prefix_level", [0, 2, 4, 6])
@@ -219,7 +257,7 @@ def test_prefix_in_filter_semi_join_branch(points, points_pdf, monkeypatch):
     pj = importlib.import_module("s2_geometry_library_java_spark.operators.pip_join")
     monkeypatch.setattr(pj, "PREFIX_IN_FILTER_MAX", 1)
     layers = make_layers()
-    result = pj.pip_join(points, layers, strategy="prefix", broadcast_cells=False)
+    result = pj.pip_join(points, layers, strategy="prefix")
     plan = result._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" in plan  # the middle-rung prune is in the executed plan
     assert " IN (" not in plan  # and the literal IN-set is gone
@@ -233,7 +271,6 @@ def test_prefix_level_range_validated(points):
     from s2_geometry_library_java_spark.operators.covering import covering_rows
     from s2_geometry_library_java_spark.operators.pip_join import (
         prefix_candidates,
-        prefix_candidates_df,
         prefix_cover_frame,
         with_cell_id,
     )
@@ -249,6 +286,6 @@ def test_prefix_level_range_validated(points):
         with pytest.raises(ValueError, match="prefix_level"):
             prefix_candidates(pts, rows, prefix_level=bad)
         with pytest.raises(ValueError, match="prefix_level"):
-            prefix_candidates_df(pts, cover, prefix_level=bad)
+            prefix_candidates(pts, cover, prefix_level=bad)
         with pytest.raises(ValueError, match="prefix_level"):
             prefix_cover_frame(cover, bad)

@@ -43,10 +43,10 @@ def test_encode_is_single_arrow_hop(points):
 def test_native_join_is_broadcast_with_folded_refinement(spark, points):
     from __spark_entry__ import NATIVE_LAYERS
 
-    plan = plan_of(pip_join(points, NATIVE_LAYERS, strategy="ancestor"))
+    plan = plan_of(pip_join(points, NATIVE_LAYERS, strategy="stab"))
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-    assert "ArrowEvalPython" in plan  # the encode hop only
+    assert "ArrowEvalPython" in plan  # the fused encode+segment hop only
     # rect/cap refinement runs inside the join condition (no extra stage)
     assert "BroadcastNestedLoopJoin" not in plan
 
@@ -89,13 +89,13 @@ def test_auto_strategy_row_hint(spark, points):
     from s2_geometry_library_java_spark.operators.pip_join import choose_strategy
 
     cov56 = covering_rows(ALL_LAYERS, max_cells=8, min_level=0, max_level=12, level_mod=1)
-    assert choose_strategy(cov56, [], n_rows=8_000_000) == "range"
-    assert choose_strategy(cov56, [], n_rows=128_000_000) == "stab"
-    assert choose_strategy(cov56, [], n_rows=None) == "stab"
+    assert choose_strategy(cov56, n_rows=8_000_000) == "range"
+    assert choose_strategy(cov56, n_rows=128_000_000) == "stab"
+    assert choose_strategy(cov56, n_rows=None) == "stab"
     big = covering_rows(ALL_LAYERS, max_cells=256, min_level=0, max_level=14, level_mod=1)
     assert len(big) > 1000
-    assert choose_strategy(big, [], n_rows=10_000) == "range"
-    assert choose_strategy(big, [], n_rows=1_000_000_000) == "stab"
+    assert choose_strategy(big, n_rows=10_000) == "range"
+    assert choose_strategy(big, n_rows=1_000_000_000) == "stab"
     plan = plan_of(pip_join(points, ALL_LAYERS, n_rows=8_000_000))
     assert "BroadcastNestedLoopJoin" in plan
     plan_big = plan_of(pip_join(points, ALL_LAYERS, n_rows=200_000_000))
@@ -144,7 +144,7 @@ def test_salted_join_shuffles(spark, points):
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         spark.conf.set("spark.sql.adaptive.enabled", "false")
-        plan = plan_of(pip_join(points, NATIVE_LAYERS, broadcast_cells=False, salt=4))
+        plan = plan_of(pip_join(points, NATIVE_LAYERS, strategy="prefix", salt=4))
         assert "BroadcastHashJoin" not in plan
         assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan)
         # the salt is PACKED into a single BIGINT join key (_pkey/_ckey), so
@@ -174,10 +174,6 @@ def test_poly_refinement_single_pass(spark, points):
     # pre-encoded input pays the extra (8B in / 4B out) seg hop instead
     plan_pre = plan_of(pip_join(with_cell_id(points), ALL_LAYERS, strategy="stab"))
     assert plan_pre.count("ArrowEvalPython") == 3
-    plan_anc = plan_of(pip_join(points, ALL_LAYERS, strategy="ancestor"))
-    # the ancestor strategy keeps the original two-hop shape
-    assert plan_anc.count("ArrowEvalPython") == 2
-    assert plan_anc.count("Scan parquet") == 1
 
 
 def test_cc_star_phases_are_min_aggs_not_adjacency_arrays(spark):

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from s2_geometry_library_java_spark.operators.pip_join import (
     PREFIX_SEMI_PRUNE_MAX,
-    prefix_candidates_df,
+    prefix_candidates,
 )
 
 LSB10 = 1 << 40
@@ -69,14 +69,14 @@ def test_auto_rung_escalates_to_bloom_at_true_scale(spark):
                 )
             )
         )
-        auto = prefix_candidates_df(probes, cover, prefix_level=10)
+        auto = prefix_candidates(probes, cover, prefix_level=10)
         plan = auto._jdf.queryExecution().executedPlan().toString()
         # the escalation really happened: bloom, not semi, not IN-set
         assert "bit_or" in plan
         assert "LeftSemi" not in plan
         assert " IN (" not in plan
         got = {(r["point_id"], r["polygon_id"]) for r in auto.collect()}
-        semi = prefix_candidates_df(probes, cover, prefix_level=10, prune="semi")
+        semi = prefix_candidates(probes, cover, prefix_level=10, prune="semi")
         expect = {(r["point_id"], r["polygon_id"]) for r in semi.collect()}
         assert got == expect
         # every inside probe matched its one covering cell; face-5 none

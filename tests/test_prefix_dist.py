@@ -17,7 +17,6 @@ from s2_geometry_library_java_spark.operators.pip_join import (
     _prefix_cover_rows,
     pip_join,
     prefix_candidates,
-    prefix_candidates_df,
     prefix_cover_frame,
     refine_candidates,
     with_cell_id,
@@ -73,7 +72,7 @@ def test_prefix_df_matches_bruteforce_and_list_arm(spark, points, points_pdf, sa
         for r in result.select("point_id", "polygon_id").collect()
     }
     assert got == oracle_matches(points_pdf, layers)
-    list_arm = pip_join(points, layers, strategy="prefix", broadcast_cells=False, salt=salt)
+    list_arm = pip_join(points, layers, strategy="prefix", salt=salt)
     expect = {
         (int(r["point_id"]), r["polygon_id"])
         for r in list_arm.select("point_id", "polygon_id").collect()
@@ -91,7 +90,7 @@ def test_prefix_df_plan_is_fully_distributed(spark, points):
     layers = make_layers()
     cover = covering_df_distributed(spark, LAYER_SPECS, max_cells=8, max_level=12)
     pts = with_cell_id(points)
-    cand = prefix_candidates_df(pts, cover, prefix_level=4, prune="semi")
+    cand = prefix_candidates(pts, cover, prefix_level=4, prune="semi")
     plan = cand._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan  # covering built on executors
     assert "LeftSemi" in plan  # broadcast-semi probe prune
@@ -114,7 +113,7 @@ def test_prefix_df_auto_prune_uses_inset_below_bound(spark, points):
     layers = make_layers()
     cover = covering_df_distributed(spark, LAYER_SPECS, max_cells=8, max_level=12)
     pts = with_cell_id(points)
-    cand = prefix_candidates_df(pts, cover, prefix_level=4)
+    cand = prefix_candidates(pts, cover, prefix_level=4)
     plan = cand._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" in plan  # covering still built on executors
     assert "LeftSemi" not in plan  # pruned by the IN-set literal instead
@@ -131,7 +130,7 @@ def test_prefix_df_auto_prune_falls_back_to_semi(spark, points, points_pdf, monk
     layers = make_layers()
     cover = covering_df_distributed(spark, LAYER_SPECS, max_cells=8, max_level=12)
     pts = with_cell_id(points)
-    cand = prefix_candidates_df(pts, cover, prefix_level=4)
+    cand = prefix_candidates(pts, cover, prefix_level=4)
     plan = cand._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" in plan
     result = refine_candidates(cand, layers)
@@ -146,7 +145,7 @@ def test_prefix_df_rejects_bad_prune(spark, points):
     cover = covering_df(spark, make_layers(), max_cells=8, max_level=12)
     pts = with_cell_id(points)
     with pytest.raises(ValueError, match="prune"):
-        prefix_candidates_df(pts, cover, prune="cuckoo")
+        prefix_candidates(pts, cover, prune="cuckoo")
 
 
 def test_prefix_df_bloom_prune_matches_and_plan(spark, points, points_pdf):
@@ -157,7 +156,7 @@ def test_prefix_df_bloom_prune_matches_and_plan(spark, points, points_pdf):
     layers = make_layers()
     cover = covering_df_distributed(spark, LAYER_SPECS, max_cells=8, max_level=12)
     pts = with_cell_id(points)
-    cand = prefix_candidates_df(pts, cover, prefix_level=4, prune="bloom")
+    cand = prefix_candidates(pts, cover, prefix_level=4, prune="bloom")
     plan = cand._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" not in plan
     assert " IN (" not in plan
@@ -184,7 +183,7 @@ def test_prefix_df_auto_prune_escalates_to_bloom(spark, points, points_pdf, monk
     layers = make_layers()
     cover = covering_df_distributed(spark, LAYER_SPECS, max_cells=8, max_level=12)
     pts = with_cell_id(points)
-    cand = prefix_candidates_df(pts, cover, prefix_level=4)
+    cand = prefix_candidates(pts, cover, prefix_level=4)
     plan = cand._jdf.queryExecution().executedPlan().toString()
     assert "LeftSemi" not in plan and "bit_or" in plan
     result = refine_candidates(cand, layers)
@@ -202,7 +201,7 @@ def test_prefix_df_bloom_with_salt_matches(spark, points, points_pdf):
     layers = make_layers()
     cover = covering_df_distributed(spark, LAYER_SPECS, max_cells=8, max_level=12)
     pts = with_cell_id(points)
-    cand = prefix_candidates_df(pts, cover, salt=4, prefix_level=4, prune="bloom")
+    cand = prefix_candidates(pts, cover, salt=4, prefix_level=4, prune="bloom")
     result = refine_candidates(cand, layers)
     got = {
         (int(r["point_id"]), r["polygon_id"])
@@ -261,7 +260,7 @@ def test_prefix_df_salted_packs_key_bits(spark, points, points_pdf):
     layers = make_layers()
     cover = covering_df_distributed(spark, LAYER_SPECS, max_cells=8, max_level=12)
     pts = with_cell_id(points)
-    cand = prefix_candidates_df(pts, cover, salt=4, prefix_level=4)
+    cand = prefix_candidates(pts, cover, salt=4, prefix_level=4)
     result = refine_candidates(cand, layers)
     got = {
         (int(r["point_id"]), r["polygon_id"])
@@ -275,7 +274,7 @@ def test_prefix_df_salt_overflow_rejected(spark, points):
     cover = covering_df(spark, layers, max_cells=8, max_level=12)
     pts = with_cell_id(points)
     with pytest.raises(ValueError, match="salt"):
-        prefix_candidates_df(pts, cover, salt=2, prefix_level=30)
+        prefix_candidates(pts, cover, salt=2, prefix_level=30)
 
 
 def test_covering_frame_rejects_other_strategies(spark, points):
