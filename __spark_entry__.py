@@ -584,7 +584,7 @@ def q_tile_mosaic(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = image_stats(
         synthetic_images(spark, MOSAIC_N_IMAGES, partitions=8), passthrough=("phash",)
     )
-    enc = encode_images(stats).withColumn(
+    enc = with_cell_id(encode_images(stats)).withColumn(
         "tile_id", parent_expr(F.col("cell_id"), MOSAIC_TILE_LEVEL)
     )
     return enc.groupBy("tile_id").agg(
@@ -2608,79 +2608,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
       entries regardless of position (its full-coverage artifact is
       committed per round as BENCH/r{N}_contract_full.txt).
 
-    Round-5 ordering: the 21 queries outside the r4 window (cellid/token
-    bit ops, pip rect/cap/counts, semi/anti, sig-side dedup queries,
-    text/metric/percentile/polyline, bounding_caps, dedup_exact) lead, then
-    the nine NEW round-5 queries (pip_join_prefix_dist,
-    pip_join_prefix_bloom, geo_neardup_salted, geo_neardup_salted_hot,
-    ann_pq, sequence_pack, domain_mixture, ann_ivfpq,
-    materialize_sequences), then 20 r4-certified entries;
-    the r4-certified entries behind the window (caption_regions, streams,
-    ANN/embedding block, polygon assembly, modalities, time-series)
-    re-enter the window in round 6 by the same rule.
+    Round-6 ordering: the 30 entries that sat outside the r5 window
+    (neardup_collapse through video_frames: the text-dedup and trajectory
+    tail of the r4 block, caption_regions, streams, ANN/embedding block,
+    polygon assembly, modalities, time-series) lead; then the r5 window in
+    its r5 order.  Its first 20 entries (cellid_bitops through dedup_exact)
+    stay in-window; the other 30 (bounding_caps through minhash_pairs:
+    the round-5 additions and the r4-certified join/geometry block) sit
+    out this round and re-enter in round 7 by the same rule.
     """
     return {
-        # --- rotated IN: outside the r4 window, driver-certified r3 (and by
-        # --- the committed full contract runs at the r4 + r5 HEADs) ---
-        "cellid_bitops": q_cellid_bitops,
-        "cellid_token": q_cellid_token,
-        "distinct_cells": q_distinct_cells,
-        "cell_rollup": q_cell_rollup,
-        "pip_join_rect": _pip_query(RECT_LAYERS),
-        "pip_join_cap": _pip_query(CAP_LAYERS),
-        "pip_counts": q_pip_counts,
-        "points_in_any_layer": q_points_any_layer,
-        "points_in_no_layer": q_points_no_layer,
-        "approx_distinct_cells": q_approx_distinct_cells,
-        "minhash_sigs": q_minhash_sigs,
-        "neardup_clusters": q_neardup_clusters,
-        "simhash": q_simhash,
-        "ngram_jaccard_capped": q_ngram_jaccard_capped,
-        "text_profile": q_text_profile,
-        "value_percentiles": q_value_percentiles,
-        "metric_levels": q_metric_levels,
-        "cell_neighbors": q_cell_neighbors,
-        "polyline_ops": q_polyline_ops,
-        "dedup_exact": q_dedup_exact,
-        "bounding_caps": q_bounding_caps,
-        # --- NEW in round 5 ---
-        "pip_join_prefix_dist": q_pip_prefix_dist,
-        "pip_join_prefix_bloom": q_pip_prefix_bloom,
-        "geo_neardup_salted": q_geo_neardup_salted,
-        "geo_neardup_salted_hot": q_geo_neardup_salted_hot,
-        "ann_pq": q_ann_pq,
-        "sequence_pack": q_sequence_pack,
-        "domain_mixture": q_domain_mixture,
-        "ann_ivfpq": q_ann_ivfpq,
-        "materialize_sequences": q_materialize_sequences,
-        # --- r4-certified entries kept in-window (operator-family spread) ---
-        "sql_api": q_sql_api,
-        "encode_rollup": q_encode_rollup,
-        "pip_join_poly": _pip_query(POLY_LAYERS),
-        "pip_join_range": _pip_query(NATIVE_LAYERS, strategy="range"),
-        "pip_join_stab": _pip_query(ALL_LAYERS, strategy="stab"),
-        "pip_join_salted": q_pip_salted,
-        "pip_join_prefix": q_pip_prefix,
-        "knn": q_knn,
-        "radius_join": q_radius_join,
-        "geo_neardup": q_geo_neardup,
-        "covering_golden": q_covering_golden,
-        "edge_crossings": q_edge_crossings,
-        "cellunion_setops": q_cellunion_setops,
-        "loop_area_centroid": q_loop_area_centroid,
-        "tile_manifest": q_tile_manifest,
-        "layout_prune": q_layout_prune,
-        "density_smooth": q_density_smooth,
-        "snap_roads": q_snap_roads,
-        "adaptive_tiles": q_adaptive_tiles,
-        "minhash_pairs": q_minhash_pairs,
+        # --- rotated IN: outside the r5 window, certified in r4 (and by
+        # --- the committed full contract runs at the r5 + r6 HEADs) ---
         "neardup_collapse": q_neardup_collapse,
         "simhash_pairs": q_simhash_pairs,
         "ngram_jaccard": q_ngram_jaccard,
         "quality_repetition": q_quality_repetition,
         "decontaminate": q_decontaminate,
         "trajectory_stats": q_trajectory_stats,
-        # --- rotated BEHIND the window (r4-green; back in-window round 6) ---
         "caption_regions": q_caption_regions,
         "simplify_traj": q_simplify_traj,
         "asof_join": q_asof_join,
@@ -2705,6 +2650,58 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tile_mosaic": q_tile_mosaic,
         "audio_stats": q_audio_stats,
         "video_frames": q_video_frames,
+        # --- the r5 window, in r5 order: the first 20 stay in-window, the
+        # --- rest sit out this round (back in-window round 7) ---
+        "cellid_bitops": q_cellid_bitops,
+        "cellid_token": q_cellid_token,
+        "distinct_cells": q_distinct_cells,
+        "cell_rollup": q_cell_rollup,
+        "pip_join_rect": _pip_query(RECT_LAYERS),
+        "pip_join_cap": _pip_query(CAP_LAYERS),
+        "pip_counts": q_pip_counts,
+        "points_in_any_layer": q_points_any_layer,
+        "points_in_no_layer": q_points_no_layer,
+        "approx_distinct_cells": q_approx_distinct_cells,
+        "minhash_sigs": q_minhash_sigs,
+        "neardup_clusters": q_neardup_clusters,
+        "simhash": q_simhash,
+        "ngram_jaccard_capped": q_ngram_jaccard_capped,
+        "text_profile": q_text_profile,
+        "value_percentiles": q_value_percentiles,
+        "metric_levels": q_metric_levels,
+        "cell_neighbors": q_cell_neighbors,
+        "polyline_ops": q_polyline_ops,
+        "dedup_exact": q_dedup_exact,
+        "bounding_caps": q_bounding_caps,
+        "pip_join_prefix_dist": q_pip_prefix_dist,
+        "pip_join_prefix_bloom": q_pip_prefix_bloom,
+        "geo_neardup_salted": q_geo_neardup_salted,
+        "geo_neardup_salted_hot": q_geo_neardup_salted_hot,
+        "ann_pq": q_ann_pq,
+        "sequence_pack": q_sequence_pack,
+        "domain_mixture": q_domain_mixture,
+        "ann_ivfpq": q_ann_ivfpq,
+        "materialize_sequences": q_materialize_sequences,
+        "sql_api": q_sql_api,
+        "encode_rollup": q_encode_rollup,
+        "pip_join_poly": _pip_query(POLY_LAYERS),
+        "pip_join_range": _pip_query(NATIVE_LAYERS, strategy="range"),
+        "pip_join_stab": _pip_query(ALL_LAYERS, strategy="stab"),
+        "pip_join_salted": q_pip_salted,
+        "pip_join_prefix": q_pip_prefix,
+        "knn": q_knn,
+        "radius_join": q_radius_join,
+        "geo_neardup": q_geo_neardup,
+        "covering_golden": q_covering_golden,
+        "edge_crossings": q_edge_crossings,
+        "cellunion_setops": q_cellunion_setops,
+        "loop_area_centroid": q_loop_area_centroid,
+        "tile_manifest": q_tile_manifest,
+        "layout_prune": q_layout_prune,
+        "density_smooth": q_density_smooth,
+        "snap_roads": q_snap_roads,
+        "adaptive_tiles": q_adaptive_tiles,
+        "minhash_pairs": q_minhash_pairs,
     }
 
 

@@ -6,7 +6,8 @@ Two tiers, chosen by where the math can run:
   Catalyst can codegen JVM-side — parent/range_min/range_max/level/face on the
   64-bit id (S2CellId.java:231-338 bit formulas), the signed-bias unsigned
   compare (S2CellId.java:897-899, realized as ``XOR Long.MIN_VALUE`` so ANSI
-  overflow never triggers), deterministic geotag derivation, and haversine.
+  overflow never triggers), the cell token, deterministic geotag derivation,
+  and haversine.
   These keep the 10^12-row hot path inside WholeStageCodegen with zero Python.
 
 - **Vectorized pandas UDFs** (``s2_cell_id`` …): the Hilbert encode/decode and
@@ -34,6 +35,7 @@ from s2_geometry_library_java_spark.functions.native import (
     face_expr,
     is_leaf_expr,
     ancestors_expr,
+    token_expr,
     geotag_lat_expr,
     geotag_lng_expr,
     haversine_expr,
@@ -61,6 +63,7 @@ __all__ = [
     "face_expr",
     "is_leaf_expr",
     "ancestors_expr",
+    "token_expr",
     "geotag_lat_expr",
     "geotag_lng_expr",
     "haversine_expr",

@@ -15,6 +15,8 @@ Every formula here is the bit-exact Spark-SQL image of a reference method:
 - ``biased``          — the unsigned-order compare trick: XOR the sign bit
                         instead of adding Long.MIN_VALUE (same total order as
                         S2CellId.java:897-899, no ANSI overflow)
+- ``token_expr``      — S2CellId.toToken(): 16 lowercase hex digits with
+                        trailing zeros stripped, ``X`` for id 0
 
 Keeping these native means the assign-join hot path — ancestors explode +
 equi-join — runs entirely in WholeStageCodegen with zero Python.
@@ -58,6 +60,14 @@ def range_max_expr(cell_id: Column) -> Column:
 def level_expr(cell_id: Column) -> Column:
     lsb = cell_id.bitwiseAND(-cell_id)
     return (F.lit(MAX_LEVEL) - F.round(F.log2(lsb.cast("double")) / F.lit(2.0))).cast("int")
+
+
+def token_expr(cell_id: Column) -> Column:
+    """S2CellId.toToken as codegen (kernel twin: ``cellid.to_token``): Spark's ``hex``
+    of a BIGINT is its two's-complement bit pattern, so faces 4-5 (negative
+    longs) need no unsigned detour; the same text the DuckDB oracle uses."""
+    digits = F.lower(F.lpad(F.hex(cell_id), 16, "0"))
+    return F.when(cell_id == F.lit(0), F.lit("X")).otherwise(F.rtrim(digits, F.lit("0")))
 
 
 def face_expr(cell_id: Column) -> Column:

@@ -66,6 +66,15 @@ def cosine_topk(
     )
 
 
+def _stack_rows(batch: pd.Series, width: int, dtype=np.float64) -> np.ndarray:
+    """An Arrow batch of array cells as an ``(n, width)`` matrix.  Every
+    vector UDF stacks through here: a zero-row batch gives ``(0, width)``
+    instead of ``np.stack``'s ValueError on an empty sequence."""
+    if not len(batch):
+        return np.empty((0, width), dtype=dtype)
+    return np.stack(batch.to_numpy()).astype(dtype)
+
+
 def _hyperplanes(dim: int, bits: int = LSH_BITS, tables: int = LSH_TABLES) -> np.ndarray:
     rng = np.random.default_rng(LSH_SEED)
     return rng.standard_normal((tables, bits, dim))
@@ -100,12 +109,12 @@ def with_lsh_buckets(
 
     @pandas_udf(ArrayType(IntegerType()))
     def lsh_sig(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy()).astype(np.float64)  # (n, dim)
+        mat = _stack_rows(vecs, dim)  # (n, dim)
         weights = (1 << np.arange(bits)).astype(np.int64)
         out = np.empty((len(mat), tables), dtype=np.int32)
         for t in range(tables):
             out[:, t] = ((mat @ planes[t].T > 0) @ weights).astype(np.int32)
-        return pd.Series(list(out))
+        return pd.Series(list(out), dtype=object)
 
     return embeddings.withColumn("lsh_buckets", lsh_sig(F.col(vec_col)))
 
@@ -246,17 +255,17 @@ def ivf_cosine_topk(
 
     @pandas_udf(IntegerType())
     def assign_cell(vecs: pd.Series) -> pd.Series:
-        M = np.stack(vecs.to_numpy()).astype(np.float64)
+        M = _stack_rows(vecs, C.shape[1])
         Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
         return pd.Series(np.argmax(Mn @ Cn.T, axis=1).astype(np.int32))
 
     @pandas_udf(ArrayType(IntegerType()))
     def probe_cells(vecs: pd.Series) -> pd.Series:
-        M = np.stack(vecs.to_numpy()).astype(np.float64)
+        M = _stack_rows(vecs, C.shape[1])
         Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
         S = Mn @ Cn.T
         order = np.argsort(-S, axis=1)[:, :n_probe].astype(np.int32)
-        return pd.Series(list(order))
+        return pd.Series(list(order), dtype=object)
 
     data = embeddings.withColumn("_cell", assign_cell(F.col(vec_col)))
     q = (
@@ -370,7 +379,7 @@ def embedding_neardup(
 
     @pandas_udf("struct<block:int,ang:double>")
     def assign(vecs: pd.Series) -> pd.DataFrame:
-        M = np.stack(vecs.to_numpy()).astype(np.float64)
+        M = _stack_rows(vecs, C.shape[1])
         Mn = M / np.linalg.norm(M, axis=1, keepdims=True)
         S = Mn @ Cn.T
         blk = np.argmax(S, axis=1)
@@ -612,14 +621,14 @@ def pq_encode(
 
     @pandas_udf(ArrayType(IntegerType()))
     def encode(vecs: pd.Series) -> pd.Series:
-        Mn = _unit_rows(np.stack(vecs.to_numpy()).astype(np.float64))
+        Mn = _unit_rows(_stack_rows(vecs, m * dsub))
         out = np.empty((len(Mn), m), dtype=np.int32)
         for j in range(m):
             sub = Mn[:, j * dsub : (j + 1) * dsub]
             # ||s-c||^2 = ||s||^2 - 2 s.c + ||c||^2; argmin over c drops ||s||^2
             D = -2.0 * (sub @ codebooks[j].T) + (codebooks[j] ** 2).sum(axis=1)
             out[:, j] = np.argmin(D, axis=1)
-        return pd.Series(list(out))
+        return pd.Series(list(out), dtype=object)
 
     return embeddings.withColumn("pq_codes", encode(F.col(vec_col)))
 
@@ -667,11 +676,11 @@ def pq_cosine_topk(
 
     @pandas_udf(ArrayType(DoubleType()))
     def adc(codes: pd.Series) -> pd.Series:
-        C = np.stack(codes.to_numpy()).astype(np.int64)  # (n, m)
+        C = _stack_rows(codes, m, np.int64)  # (n, m)
         S = np.zeros((len(C), nq))
         for j in range(m):
             S += lut[:, j, :][:, C[:, j]].T
-        return pd.Series(list(S))
+        return pd.Series(list(S), dtype=object)
 
     codes_df = pq_encode(embeddings, books, vec_col=vec_col).select(id_col, "pq_codes")
     pairs = codes_df.select(
@@ -733,14 +742,14 @@ def ivfpq_cosine_topk(
 
     @pandas_udf(IntegerType())
     def assign_cell(vecs: pd.Series) -> pd.Series:
-        Mn = _unit_rows(np.stack(vecs.to_numpy()).astype(np.float64))
+        Mn = _unit_rows(_stack_rows(vecs, Cn.shape[1]))
         return pd.Series(np.argmax(Mn @ Cn.T, axis=1).astype(np.int32))
 
     from pyspark.sql.types import DoubleType, LongType
 
     @pandas_udf(DoubleType())
     def adc_pair(codes: pd.Series, qpos: pd.Series) -> pd.Series:
-        Cd = np.stack(codes.to_numpy()).astype(np.int64)  # (n, m)
+        Cd = _stack_rows(codes, m, np.int64)  # (n, m)
         qp = qpos.to_numpy().astype(np.int64)
         s = np.zeros(len(Cd))
         for j in range(m):

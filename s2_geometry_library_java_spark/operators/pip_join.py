@@ -18,7 +18,10 @@ intervals, picked by ``pip_join(strategy=...)``:
   each leaf id to its segment (an int32), and a broadcast equi-join on the
   segment id expands to candidates.  O(log B) per row instead of the BNLJ's
   O(B), and no fact-side row amplification.  No shuffle, so hot cells
-  cannot skew anything.  Broadcast-only like "range".
+  cannot skew anything.  Broadcast-only like "range".  It is the one arm
+  that crosses the Arrow boundary once per fact row: the same hop encodes
+  (when the id is absent), finds the segment and runs the loop/polygon
+  parity kernel, returning a bit mask beside the segment.
 
 - **prefix-partitioned interval join** (``prefix_candidates``, the 100-TB
   arm, auto-chosen whenever the covering must not be broadcast): one
@@ -34,10 +37,14 @@ intervals, picked by ``pip_join(strategy=...)``:
   then stay DataFrame-native.
 
 Refinement then applies the exact membership predicate only to candidates
-from non-interior covering cells (O5): natively for rect/cap layers, through
-the vectorized edge-crossing-parity kernel (S2Loop.java:624-654 via
-kernel.predicates.loop_crossing_parity) inside mapInPandas for loop/polygon
-layers.  Covering cells of one region are disjoint (normalized,
+from non-interior covering cells (O5): natively for rect/cap layers (a
+codegen'd CASE chain), and for loop/polygon layers through the vectorized
+edge-crossing-parity kernel (S2Loop.java:624-654 via
+kernel.predicates.loop_crossing_parity).  The range and prefix arms run the
+kernel in a ``parity_contains`` Arrow hop over their candidates
+(``refine_candidates``); the stab arm runs it inside its per-point hop and
+reads the result back as a mask bit, so its refinement is pure codegen.
+Covering cells of one region are disjoint (normalized,
 S2CellUnion.java:561-618), so no point matches a region twice — the join
 emits no duplicates by construction.
 """
@@ -124,61 +131,161 @@ def _stab_structure(rows: list[tuple]) -> tuple[np.ndarray, list[tuple]]:
     return bounds, seg_rows
 
 
-_CELL_SEG_TYPE = StructType(
-    [StructField("cell", LongType(), False), StructField("seg", IntegerType(), False)]
-)
+def _refine_slots(
+    seg_rows: list[tuple], n_seg: int, kernel_ids: dict[str, int]
+) -> tuple[list[tuple], np.ndarray, np.ndarray, int]:
+    """Number the segment rows the stab hop refines inside its own batch.
+
+    A segment row needs the parity kernel iff its layer is a loop/polygon
+    (``kernel_ids`` maps those polygon ids to kernel indices) and its cell
+    is not interior.  Such a row gets ``_kpos``, its position among those
+    rows in its segment, which is the bit the hop sets for a point that
+    passes; every other row gets -1.  Returns the rows as
+    ``(segment, polygon_id, is_interior, _kpos)``, the per-segment slot
+    offsets (CSR, ``n_seg + 1`` long), the kernel index of each slot, and
+    the BIGINT mask words needed for the deepest segment."""
+    depth = np.zeros(n_seg, dtype=np.int64)
+    tagged: list[tuple] = []
+    for s, pid, interior in seg_rows:
+        k = -1
+        if pid in kernel_ids and not interior:
+            k = int(depth[s])
+            depth[s] += 1
+        tagged.append((s, pid, interior, k))
+    koff = np.zeros(n_seg + 1, dtype=np.int64)
+    np.cumsum(depth, out=koff[1:])
+    kslot = np.empty(int(koff[-1]), dtype=np.int64)
+    for s, pid, _, k in tagged:
+        if k >= 0:
+            kslot[koff[s] + k] = kernel_ids[pid]
+    n_words = -(-int(depth.max(initial=0)) // 64)
+    return tagged, koff, kslot, n_words
+
+
+def _stab_batch(
+    bounds: np.ndarray,
+    koff: np.ndarray,
+    kslot: np.ndarray,
+    kernels: list[Layer],
+    n_words: int,
+    ids: np.ndarray,
+    lat: np.ndarray | None,
+    lng: np.ndarray | None,
+) -> dict[str, np.ndarray]:
+    """One stab-hop batch: each leaf id's segment, plus (when ``n_words``)
+    mask words whose bit ``_kpos`` is set where the point lies inside that
+    slot's loop/polygon.  The parity kernel runs once per layer on exactly
+    the (point, layer) pairs whose segment carries a refine slot of that
+    layer — the pairs a separate refine hop would test."""
+    seg = np.searchsorted(bounds, ids ^ _U64_BIAS, side="right") - 1
+    out = {"seg": seg.astype(np.int32)}
+    if not n_words:
+        return out
+    words = np.zeros((n_words, len(ids)), dtype=np.uint64)
+    start = koff[seg]
+    cnt = koff[seg + 1] - start
+    pt = np.repeat(np.arange(len(ids)), cnt)
+    kpos = np.arange(len(pt)) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    layer = kslot[start[pt] + kpos]
+    order = np.argsort(layer, kind="stable")
+    for grp in np.split(order, np.flatnonzero(np.diff(layer[order])) + 1):
+        if not len(grp):
+            continue
+        p = pt[grp]
+        hit = kernels[layer[grp[0]]].contains_points(lat[p], lng[p])
+        k = kpos[grp][hit]
+        np.bitwise_or.at(
+            words, (k >> 6, p[hit]), np.left_shift(np.uint64(1), (k & 63).astype(np.uint64))
+        )
+    for i in range(n_words):
+        out[f"m{i}"] = words[i].view(np.int64)
+    return out
+
+
+def _mask_bit(n_words: int) -> Column:
+    """True where the stab hop set the row's ``_kpos`` bit in its mask
+    words ``_m0``.. (word ``_kpos >> 6``, bit ``_kpos & 63``)."""
+    if n_words == 1:
+        word = "_m0"
+    else:
+        arms = " ".join(f"WHEN {i} THEN _m{i}" for i in range(n_words))
+        word = f"CASE shiftright(_kpos, 6) {arms} END"
+    return F.expr(f"_kpos >= 0 AND (shiftright({word}, _kpos & 63) & 1) = 1")
 
 
 def stab_candidates(
     points: DataFrame,
     covering: list[tuple],
+    layers: list[Layer],
     lat_col: str = "lat",
     lng_col: str = "lng",
     cell_col: str = "cell_id",
 ) -> DataFrame:
-    """Candidate pairs via the vectorized S2CellUnion.contains binary search
-    (see module docstring).  Keeps all point columns plus ``polygon_id`` and
-    ``is_interior``; points outside every covering interval drop out in the
-    broadcast equi-join (inner, same semantics as the other strategies).
+    """Exact (point, polygon) pairs via the vectorized S2CellUnion.contains
+    binary search (see module docstring), refined in the same Arrow hop.
+    Keeps all point columns plus ``polygon_id`` and ``is_interior``; points
+    outside every covering interval drop out in the broadcast equi-join
+    (inner, same semantics as the other strategies).
 
-    Pre-encoded points (``cell_col`` present) pay one 8 B-in / 4 B-out
-    ``seg_of`` hop on the existing id.  Un-encoded points pay a single
-    ``cell_seg`` struct hop that returns (cell_id, segment) together instead
-    of encode-hop + seg-hop (same kernel, same searchsorted)."""
+    One hop per fact row.  Un-encoded points pay a single ``cell_seg``
+    struct hop, (lat, lng) -> (cell_id, segment, mask); pre-encoded points
+    (``cell_col`` present) pay a ``seg_of`` hop, (cell_id, lat, lng) ->
+    (segment, mask).  The mask carries the loop/polygon parity results for
+    the point's segment (``_refine_slots``); with no loop/polygon refine
+    slot there is no mask and ``seg_of`` reads the id alone.  The filter
+    after the broadcast join is then pure codegen: interior cell, OR the
+    rect/cap CASE chain, OR the mask bit at the row's ``_kpos``."""
     bounds, seg_rows = _stab_structure(covering)
+    native_pred, kernels = _native_case(layers, lat_col, lng_col)
+    tagged, koff, kslot, n_words = _refine_slots(
+        seg_rows, len(bounds), {l.polygon_id: i for i, l in enumerate(kernels)}
+    )
+    masks = [f"m{i}" for i in range(n_words)]
+    seg_fields = [StructField("seg", IntegerType(), False)] + [
+        StructField(m, LongType(), False) for m in masks
+    ]
+
+    def batch(ids: np.ndarray, latlng: tuple[pd.Series, ...]) -> dict[str, np.ndarray]:
+        lat, lng = (s.to_numpy(dtype=np.float64) for s in latlng) if latlng else (None, None)
+        return _stab_batch(bounds, koff, kslot, kernels, n_words, ids, lat, lng)
 
     if cell_col in points.columns:
-        @pandas_udf(IntegerType())
-        def seg_of(cid: pd.Series) -> pd.Series:
-            b = cid.to_numpy(dtype=np.int64).view(np.uint64) ^ _U64_BIAS
-            seg = np.searchsorted(bounds, b, side="right") - 1
-            return pd.Series(seg.astype(np.int32))
+        @pandas_udf(StructType(seg_fields))
+        def seg_of(cid: pd.Series, *latlng: pd.Series) -> pd.DataFrame:
+            return pd.DataFrame(batch(cid.to_numpy(dtype=np.int64).view(np.uint64), latlng))
 
-        # coalesce marks _seg non-null so the join's inferred IsNotNull doesn't
-        # re-evaluate the UDF (same Catalyst trap as with_cell_id).
-        pts = points.withColumn(
-            "_seg", F.coalesce(seg_of(F.col(cell_col)), F.lit(-1))
-        )
+        latlng_cols = [F.col(lat_col), F.col(lng_col)] if n_words else []
+        pts = points.withColumn("_cs", seg_of(F.col(cell_col), *latlng_cols))
     else:
-        @pandas_udf(_CELL_SEG_TYPE)
+        @pandas_udf(StructType([StructField("cell", LongType(), False)] + seg_fields))
         def cell_seg(lat_s: pd.Series, lng_s: pd.Series) -> pd.DataFrame:
             ids = ck.from_latlng_degrees(
                 lat_s.to_numpy(dtype=np.float64), lng_s.to_numpy(dtype=np.float64)
             )
-            seg = np.searchsorted(bounds, ids ^ _U64_BIAS, side="right") - 1
-            return pd.DataFrame({"cell": ids.view(np.int64), "seg": seg.astype(np.int32)})
+            return pd.DataFrame({"cell": ids.view(np.int64), **batch(ids, (lat_s, lng_s))})
 
-        pts = (
-            points.withColumn("_cs", cell_seg(F.col(lat_col), F.col(lng_col)))
-            .withColumn(cell_col, F.col("_cs.cell"))
-            # coalesce marks the join key non-null (see with_cell_id)
-            .withColumn("_seg", F.coalesce(F.col("_cs.seg"), F.lit(-1)))
-            .drop("_cs")
+        pts = points.withColumn("_cs", cell_seg(F.col(lat_col), F.col(lng_col))).withColumn(
+            cell_col, F.col("_cs.cell")
         )
+    # coalesce marks the join key non-null so the join's inferred IsNotNull
+    # doesn't re-evaluate the UDF (same Catalyst trap as with_cell_id)
+    pts = pts.withColumn("_seg", F.coalesce(F.col("_cs.seg"), F.lit(-1)))
+    for m in masks:
+        pts = pts.withColumn(f"_{m}", F.col(f"_cs.{m}"))
     seg_df = points.sparkSession.createDataFrame(
-        seg_rows, "_seg int, polygon_id string, is_interior boolean"
+        tagged, "_seg int, polygon_id string, is_interior boolean, _kpos int"
     )
-    return pts.join(F.broadcast(seg_df), "_seg", "inner").drop("_seg")
+    keep = F.col("is_interior")
+    if native_pred is not None:
+        keep = keep | native_pred
+    if n_words:
+        keep = keep | _mask_bit(n_words)
+    return (
+        pts.drop("_cs")
+        .join(F.broadcast(seg_df), "_seg", "inner")
+        .filter(keep)
+        .drop("_seg", "_kpos", *[f"_{m}" for m in masks])
+    )
 
 
 # Above this many DISTINCT covering prefixes the probe pre-filter switches
@@ -526,6 +633,26 @@ def prefix_candidates(
     return out.drop("_pfx", "_pkey", "_ckey", "_rmin", "_rmax")
 
 
+def _native_case(
+    layers: list[Layer], lat_col: str = "lat", lng_col: str = "lng"
+) -> tuple[Column | None, list[Layer]]:
+    """The rect/cap membership tests as one codegen'd CASE chain on
+    ``polygon_id`` (None when there are no such layers), plus the layers
+    that need the parity kernel instead."""
+    native = [l for l in layers if l.native_predicate(F.col(lat_col), F.col(lng_col)) is not None]
+    native_ids = {l.polygon_id for l in native}
+    kernel_layers = [l for l in layers if l.polygon_id not in native_ids]
+    if not native:
+        return None, kernel_layers
+    pred: Column = F.lit(False)
+    for layer in native:
+        pred = F.when(
+            F.col("polygon_id") == F.lit(layer.polygon_id),
+            layer.native_predicate(F.col(lat_col), F.col(lng_col)),
+        ).otherwise(pred)
+    return pred, kernel_layers
+
+
 def membership_expr(
     layers: list[Layer],
     lat_col: str = "lat",
@@ -541,19 +668,10 @@ def membership_expr(
     the layer mix (no union of per-kind branches).  ``seed`` is an optional
     already-decided-true Column (e.g. interior-covering-cell membership);
     rows where it holds skip both the CASE chain and the parity sweep."""
-    native = [l for l in layers if l.native_predicate(F.col(lat_col), F.col(lng_col)) is not None]
-    native_ids = {l.polygon_id for l in native}
-    kernel_layers = [l for l in layers if l.polygon_id not in native_ids]
-
+    native_pred, kernel_layers = _native_case(layers, lat_col, lng_col)
     cond: Column = seed if seed is not None else F.lit(False)
-    if native:
-        pred: Column = F.lit(False)
-        for layer in native:
-            pred = F.when(
-                F.col("polygon_id") == F.lit(layer.polygon_id),
-                layer.native_predicate(F.col(lat_col), F.col(lng_col)),
-            ).otherwise(pred)
-        cond = cond | pred
+    if native_pred is not None:
+        cond = cond | native_pred
 
     if kernel_layers:
         by_id = {l.polygon_id: l for l in kernel_layers}
@@ -597,18 +715,20 @@ def refine_candidates(
     lat_col: str = "lat",
     lng_col: str = "lng",
 ) -> DataFrame:
-    """Exact membership filter on non-interior candidates (boundary cells):
-    ``membership_expr`` seeded with the interior-covering-cell flag.
+    """Exact membership filter on non-interior candidates (boundary cells)
+    of the range and prefix arms: ``membership_expr`` seeded with the
+    interior-covering-cell flag, so loop/polygon candidates pay one
+    ``parity_contains`` Arrow hop.  The stab arm does not come here: it
+    runs the parity kernel inside its own per-point hop (``stab_candidates``).
 
-    Measured dead end (round 3, do not re-try without new evidence): fusing
-    a per-POINT kernel-membership bitmask into the pre-join encode
-    projection (eliminating this hop entirely; candidates then refine in
-    pure codegen) LOST an interleaved A/B at the 8M-row bench — min 4.32 s
-    vs 3.71 s, median 5.09 vs 4.02.  The bitmask UDF widens the hot encode
-    hop's Arrow input from 8 B (phash) to 24 B (+lat,lng) on every fact
-    row, while this hop only carries the candidate subset (~0.6x rows
-    here); per-candidate refine wins whenever match-rate x refine-cols <
-    encode-widening x fact-rows."""
+    History: round 3 fused a per-POINT kernel-membership bitmask into the
+    pre-join encode hop of the range arm and lost an interleaved A/B at the
+    8M-row bench (min 4.32 s vs 3.71 s): the bitmask widened the encode
+    hop's Arrow input from 8 B (phash) to 24 B (+lat, lng) while this hop
+    carried only the candidate subset.  The stab arm's in-hop refine is a
+    different trade: it needs no extra hop of its own and replaces the
+    encode, segment and refine hops with one, and on a 4-core box each
+    Arrow hop's fixed cost outweighs the bytes it carries."""
     return candidates.filter(
         membership_expr(layers, lat_col, lng_col, seed=F.col("is_interior"))
     )
@@ -645,7 +765,9 @@ RANGE_BREAKEVEN_CELLS = 48
 #   8M rows x  305 cells = 2.4e9 -> range 4.0s vs stab 7.2s  (range)
 #   8M rows x 1412 cells = 1.1e10 -> range 5.9s vs stab 4.7s (stab)
 # 128M rows x   56 cells = 7.2e9 -> range 10.5s vs stab 9.2s (stab)
-# One budget separates all four cleanly.
+# One budget separates all four cleanly.  These runs predate the single-hop
+# stab arm (encode, segment and parity refine in one Arrow hop), which
+# can move the crossover; the budget has not been re-derived since.
 RANGE_WORK_BUDGET = 4_000_000_000
 # Above this the covering should not be broadcast at all (the segment table
 # grows with covering size and overlap); the prefix-partitioned interval
@@ -746,11 +868,12 @@ def pip_join(
         if strategy == "auto":
             strategy = "prefix" if prefix_knobs else choose_strategy(cover, n_rows)
     if strategy == "stab":
-        cand = stab_candidates(points, cover, lat_col, lng_col, cell_col)
+        out = stab_candidates(points, cover, layers, lat_col, lng_col, cell_col)
     else:
         pts = with_cell_id(points, lat_col, lng_col, cell_col)
         if strategy == "prefix":
             cand = prefix_candidates(pts, cover, cell_col, salt, prefix_level, prune)
         else:
             cand = range_candidates(pts, cover, cell_col)
-    return refine_candidates(cand, layers, lat_col, lng_col).drop("is_interior")
+        out = refine_candidates(cand, layers, lat_col, lng_col)
+    return out.drop("is_interior")

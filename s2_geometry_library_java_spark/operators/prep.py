@@ -31,7 +31,7 @@ functions/sql_api.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 KNUTH = 2654435761
@@ -104,6 +104,15 @@ def bucket_expr_sql(key_col: str = "doc_id", n_buckets: int = 64) -> str:
     return f"({_hash_expr(key_col, 1)} % {n_buckets})"
 
 
+def _slice_id(offset: Column, size: int) -> Column:
+    """Slice of a global token ``offset`` in slices of ``size`` tokens:
+    ``offset DIV size``, exact BIGINT division (offsets are non-negative, so
+    truncation is the floor).  A double division rounds offsets past 2^53,
+    where a 100 TB token stream lives, onto the wrong slice; the DuckDB
+    twins use the same integer ``//``."""
+    return F.call_function("div", offset, F.lit(int(size)))
+
+
 def shard_by_token_budget(
     docs: DataFrame,
     budget_tokens: int,
@@ -125,7 +134,7 @@ def shard_by_token_budget(
         key_col,
         "bucket",
         "n_tokens",
-        F.floor(F.col("_o") / F.lit(int(budget_tokens))).cast("long").alias("shard"),
+        _slice_id(F.col("_o"), budget_tokens).alias("shard"),
     )
 
 
@@ -193,8 +202,8 @@ def shard_oracle_sql(
     return (
         f"SELECT {key_col}, CAST({bucket} AS INTEGER) AS bucket, "
         f"CAST({toks} AS BIGINT) AS n_tokens, "
-        f"CAST(FLOOR(COALESCE(SUM({toks}) OVER (ORDER BY {bucket}, {key_col} "
-        f"ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) / {budget_tokens}) AS BIGINT) AS shard "
+        f"CAST(COALESCE(SUM({toks}) OVER (ORDER BY {bucket}, {key_col} "
+        f"ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) // {budget_tokens} AS BIGINT) AS shard "
         f"FROM {table}"
     )
 
@@ -233,8 +242,8 @@ def pack_concat_slices(
         key_col,
         "bucket",
         "n_tokens",
-        F.floor(F.col("_o") / F.lit(c)).cast("long").alias("start_seq"),
-        F.floor((F.col("_o") + F.col("n_tokens") - 1) / F.lit(c)).cast("long").alias("end_seq"),
+        _slice_id(F.col("_o"), c).alias("start_seq"),
+        _slice_id(F.col("_o") + F.col("n_tokens") - 1, c).alias("end_seq"),
         (F.col("_o") % F.lit(c)).cast("long").alias("offset_in_seq"),
     )
 
@@ -257,8 +266,8 @@ def pack_oracle_sql(
     return (
         f"SELECT {key_col}, CAST({bucket} AS INTEGER) AS bucket, "
         f"CAST({toks} AS BIGINT) AS n_tokens, "
-        f"CAST(FLOOR({o} / {context_len}) AS BIGINT) AS start_seq, "
-        f"CAST(FLOOR(({o} + {toks} - 1) / {context_len}) AS BIGINT) AS end_seq, "
+        f"CAST({o} // {context_len} AS BIGINT) AS start_seq, "
+        f"CAST(({o} + {toks} - 1) // {context_len} AS BIGINT) AS end_seq, "
         f"CAST({o} % {context_len} AS BIGINT) AS offset_in_seq "
         f"FROM {table}"
     )
@@ -363,7 +372,7 @@ def materialize_sequences(
     )
     c = int(context_len)
     return (
-        toks.groupBy(F.floor(F.col("_gpos") / F.lit(c)).cast("long").alias("seq_id"))
+        toks.groupBy(_slice_id(F.col("_gpos"), c).alias("seq_id"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_tokens"),
             F.countDistinct(key_col).cast("long").alias("n_docs"),
@@ -399,7 +408,7 @@ WITH base AS (
 ), tok AS (
   SELECT {key_col}, doc_off + unnest(range(len(toks))) AS gpos, unnest(toks) AS tok FROM o
 )
-SELECT CAST(FLOOR(gpos / {context_len}) AS BIGINT) AS seq_id,
+SELECT CAST(gpos // {context_len} AS BIGINT) AS seq_id,
        CAST(COUNT(*) AS BIGINT) AS n_tokens,
        CAST(COUNT(DISTINCT {key_col}) AS BIGINT) AS n_docs,
        string_agg(tok, ' ' ORDER BY gpos) AS text

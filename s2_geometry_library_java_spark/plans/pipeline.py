@@ -1,14 +1,19 @@
 """The north-rule pipeline (SURVEY.md §3.4), end to end:
 
     images --[phash anchor, native bit math]--> lat/lng
-           --[K23 encode kernel, one Arrow hop]--> cell_id
-           --[covering assign-join + refine]--> (image, polygon) matches
-           --[C5 tile-parent bit math]--> tile_id
+           --[ONE Arrow hop: K23 encode + interval stab + loop/polygon
+              parity, returning (cell_id, segment, mask)]-->
+           --[broadcast join on the segment + codegen refine]--> matches
+           --[C5 tile-parent bit math + native token]--> tile_id/tile_token
            --[bucketed manifest write + ledger]--> resumable output
 
-Exactly two wide stages in the happy path: the assign join (broadcast => no
-shuffle at all) and the tile-bucket write.  Everything between scan and the
-pandas encode hop is native/codegen.
+One Arrow hop per fact row: ``encode_images`` is pure native, the stab arm
+of ``pip_join`` encodes, stabs and refines in the single hop it pays anyway,
+and the manifest tokenizes with a native expression.  Exactly two wide
+stages in the happy path: the assign join (broadcast => no shuffle at all)
+and the tile-bucket write.  (The range and prefix arms, picked for small
+fact tables or huge layer dimensions, encode in their own hop and refine
+loop/polygon candidates in a second one.)
 """
 
 from __future__ import annotations
@@ -25,29 +30,20 @@ from s2_geometry_library_java_spark.sources.images import synthetic_images
 
 
 def encode_images(images: DataFrame) -> DataFrame:
-    """phash -> anchor lat/lng (FIXTURES.md F1 recipe, native bit math) +
-    leaf cell id (vectorized kernel, fused phash input).
+    """phash -> anchor ``lat``/``lng`` (FIXTURES.md F1 recipe), pure native
+    bit math: no Arrow hop and no ``cell_id`` column.
 
-    The encode UDF takes the 8-byte phash directly (the anchor derivation
-    runs inside the kernel batch) instead of 16 bytes of lat/lng — and the
-    lat/lng columns stay PURE NATIVE projections of phash, so Catalyst
-    computes them only where referenced (the post-join refinement of
-    boundary candidates), never materializing them across the full fact
-    path.  The coalesce marks cell_id non-null (see pip_join.with_cell_id).
-    """
-    from s2_geometry_library_java_spark.functions.udfs import s2_cell_id_from_phash
-
+    The first consumer encodes in the hop it already pays: ``pip_join``'s
+    stab arm returns the leaf id from its one per-point hop, and the range
+    and prefix arms encode through ``with_cell_id``.  The anchor arithmetic
+    is the same IEEE double math as ``sources.images.phash_anchor_*``, so
+    the ids are bit-identical to ``s2_cell_id_from_phash(phash)``.  Callers
+    that want ids without a join call ``with_cell_id`` on the result."""
     upper = F.shiftrightunsigned(F.col("phash"), 32).cast("double")
     lower = F.col("phash").bitwiseAND(F.lit(0xFFFFFFFF)).cast("double")
     lat = F.lit(-90.0) + F.lit(180.0) * (upper / F.lit(4294967296.0))
     lng = F.lit(-180.0) + F.lit(360.0) * (lower / F.lit(4294967296.0))
-    return (
-        images.withColumn(
-            "cell_id", F.coalesce(s2_cell_id_from_phash(F.col("phash")), F.lit(0))
-        )
-        .withColumn("lat", lat)
-        .withColumn("lng", lng)
-    )
+    return images.withColumn("lat", lat).withColumn("lng", lng)
 
 
 def run_pipeline(

@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from s2_geometry_library_java_spark.operators.images import image_stats, resize_images
 from s2_geometry_library_java_spark.operators.layers import cap_layer, rect_layer
+from s2_geometry_library_java_spark.operators.pip_join import pip_join
 from s2_geometry_library_java_spark.plans.pipeline import encode_images, run_pipeline
 from s2_geometry_library_java_spark.sources.images import (
     caption_for,
@@ -74,14 +75,19 @@ def test_encode_images_matches_phash_anchor(images):
 
 
 def test_fused_phash_encode_bit_identical(images):
-    """The fused phash->cell UDF must equal encoding the native lat/lng
-    columns (same kernel, same anchor arithmetic)."""
-    from s2_geometry_library_java_spark.functions.udfs import s2_cell_id
+    """encode_images emits no id; the cell_id pip_join emits (from its one
+    stab hop on the native lat/lng) must equal the fused phash->cell UDF
+    (same kernel, same anchor arithmetic)."""
+    from s2_geometry_library_java_spark.functions.udfs import s2_cell_id_from_phash
 
     enc = encode_images(images)
-    bad = enc.withColumn(
-        "cell_ref", F.coalesce(s2_cell_id(F.col("lat"), F.col("lng")), F.lit(0))
-    ).filter(F.col("cell_id") != F.col("cell_ref")).count()
+    assert "cell_id" not in enc.columns
+    world = [rect_layer("world", -90.0, -180.0, 90.0, 180.0)]
+    m = pip_join(enc, world, strategy="stab")
+    assert m.count() == images.count()
+    bad = m.withColumn("cell_ref", s2_cell_id_from_phash(F.col("phash"))).filter(
+        F.col("cell_id") != F.col("cell_ref")
+    ).count()
     assert bad == 0
 
 

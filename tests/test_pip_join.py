@@ -177,6 +177,72 @@ def test_stab_structure_matches_direct_range_membership():
         assert by_seg.get(int(s), set()) == expect
 
 
+def _stacked_squares(n: int) -> list:
+    """``n`` half-degree squares, each shifted a few arc-seconds from the
+    last: their coverings share boundary cells, so one stab segment carries
+    a refine slot per square."""
+    out = []
+    for i in range(n):
+        a, b, s = 10.0 + 0.003 * i, 20.0 + 0.002 * i, 0.5
+        out.append(loop_layer(f"sq{i:02d}", f"{a}:{b}, {a}:{b + s}, {a + s}:{b + s}, {a + s}:{b}"))
+    return out
+
+
+STAB_REFINE_CASES = {
+    # loop and polygon overlap, so segments carry two refine slots; the
+    # region includes p_hole's hole
+    "hole_overlap": (
+        lambda: [
+            loop_layer("l_tri", "0:0, 0:40, 35:20"),
+            polygon_layer("p_hole", "-5:-5, -5:45, 40:45, 40:-5; 5:5, 25:20, 5:35"),
+            rect_layer("r_mid", 10.0, 10.0, 30.0, 30.0),
+        ],
+        (-10.0, 45.0, -10.0, 50.0),
+        1,
+    ),
+    # 70 slots in one segment: the second mask word
+    "stacked_70": (lambda: _stacked_squares(70), (9.9, 10.8, 19.9, 20.8), 2),
+}
+
+
+@pytest.mark.parametrize("encoded", [False, True], ids=["raw", "pre_encoded"])
+@pytest.mark.parametrize("case", list(STAB_REFINE_CASES))
+def test_stab_in_hop_refine_matches_bruteforce(spark, case, encoded):
+    """The stab arm refines loop/polygon candidates inside its one Arrow
+    hop and reads the answer back as a mask bit; its matches must equal
+    brute-force ``Layer.contains_points`` on every layer."""
+    import pandas as pd
+
+    from s2_geometry_library_java_spark.operators.pip_join import _refine_slots, _stab_structure
+
+    make, (lat_lo, lat_hi, lng_lo, lng_hi), words = STAB_REFINE_CASES[case]
+    layers = make()
+    bounds, seg_rows = _stab_structure(covering_rows(layers, max_cells=8, max_level=12))
+    kernel_ids = {l.polygon_id: i for i, l in enumerate(layers) if l.kind in ("loop", "polygon")}
+    _, koff, _, n_words = _refine_slots(seg_rows, len(bounds), kernel_ids)
+    assert n_words == words
+    assert np.diff(koff).max() >= 2  # some segment refines two layers at once
+
+    rng = np.random.default_rng(11)
+    n = 20_000
+    pdf = pd.DataFrame(
+        {
+            "point_id": np.arange(n, dtype=np.int64),
+            "lat": rng.uniform(lat_lo, lat_hi, n),
+            "lng": rng.uniform(lng_lo, lng_hi, n),
+        }
+    )
+    if case == "hole_overlap":
+        hole = loop_layer("hole", "5:5, 25:20, 5:35").contains_points(pdf["lat"].to_numpy(), pdf["lng"].to_numpy())
+        assert hole.sum() > 100
+    pts = spark.createDataFrame(pdf)
+    if encoded:
+        pts = with_cell_id(pts)
+    result = pip_join(pts, layers, strategy="stab")
+    got = {(int(r["point_id"]), r["polygon_id"]) for r in result.select("point_id", "polygon_id").collect()}
+    assert got == oracle_matches(pdf, layers)
+
+
 def test_covering_df_shape_and_interior(spark):
     layers = [cap_layer("c", 10.0, 20.0, 10.0)]
     rows = covering_rows(layers, max_cells=16)
@@ -211,6 +277,27 @@ def test_native_vs_kernel_bit_ops(spark, points):
     assert np.array_equal(np.array([r["p5"] for r in rows], dtype=np.int64), ck.parent(ids, 5).view(np.int64))
     assert np.array_equal(np.array([r["rmin"] for r in rows], dtype=np.int64), ck.range_min(ids).view(np.int64))
     assert np.array_equal(np.array([r["rmax"] for r in rows], dtype=np.int64), ck.range_max(ids).view(np.int64))
+
+
+def test_native_token_matches_kernel(spark):
+    """token_expr (the manifest's native token) == the kernel's to_token on
+    leaves from all six faces and on their parents at several levels,
+    negative (face 4-5) ids and id 0 included."""
+    import pandas as pd
+
+    from s2_geometry_library_java_spark.functions.native import token_expr
+    from s2_geometry_library_java_spark.kernel import cellid as ck
+
+    rng = np.random.default_rng(5)
+    leaves = ck.from_latlng_degrees(rng.uniform(-90, 90, 4000), rng.uniform(-180, 180, 4000))
+    ids = np.concatenate(
+        [leaves] + [ck.parent(leaves, lv) for lv in (0, 1, 3, 7, 12, 29)] + [np.zeros(1, np.uint64)]
+    )
+    signed = ids.view(np.int64)
+    assert (signed < 0).sum() > 1000 and (signed == 0).sum() == 1
+    df = spark.createDataFrame(pd.DataFrame({"c": signed}))
+    got = [r[0] for r in df.select(token_expr(F.col("c"))).collect()]
+    assert got == list(ck.to_token(ids))
 
 
 def test_distributed_covering_matches_driver(spark):

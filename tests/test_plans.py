@@ -160,20 +160,38 @@ def test_salted_join_shuffles(spark, points):
 def test_poly_refinement_single_pass(spark, points):
     from __spark_entry__ import ALL_LAYERS
 
-    # default (auto -> stab at 56 cells, no row hint) FUSES encode+stab into
-    # one struct hop on un-encoded input: exactly two python ops total (the
-    # fused hop + the parity refinement) — proof the refine is single-pass
-    # (no union of per-kind branches)
+    # default (auto -> stab at 56 cells, no row hint) on un-encoded input:
+    # ONE python op in total — the cell_seg hop encodes, stabs and runs the
+    # loop/polygon parity kernel; the refine is codegen on the join
     plan = plan_of(pip_join(points, ALL_LAYERS))
-    assert plan.count("ArrowEvalPython") == 2
+    assert plan.count("ArrowEvalPython") == 1
+    assert "parity_contains" not in plan
     assert plan.count("Scan parquet") == 1
     # the small-fact range path (BNLJ) adds zero Python: encode + parity only
     plan_rng = plan_of(pip_join(points, ALL_LAYERS, strategy="range"))
     assert plan_rng.count("ArrowEvalPython") == 2
     assert plan_rng.count("Scan parquet") == 1
-    # pre-encoded input pays the extra (8B in / 4B out) seg hop instead
+    # pre-encoded input pays its encode hop plus the seg_of hop, which
+    # refines in the same batch
     plan_pre = plan_of(pip_join(with_cell_id(points), ALL_LAYERS, strategy="stab"))
-    assert plan_pre.count("ArrowEvalPython") == 3
+    assert plan_pre.count("ArrowEvalPython") == 2
+    assert "parity_contains" not in plan_pre
+
+
+def test_geotag_job_is_one_arrow_hop(spark):
+    """encode_images -> pip_join -> tile_manifest crosses the Arrow
+    boundary once per fact row: encode_images is native, the stab hop
+    encodes and refines, and the manifest token is a native expression."""
+    from __spark_entry__ import ALL_LAYERS
+    from s2_geometry_library_java_spark.operators.tiling import tile_manifest
+    from s2_geometry_library_java_spark.plans.pipeline import encode_images
+
+    imgs = spark.range(2000).select(F.xxhash64("id").alias("phash"))
+    plan = plan_of(tile_manifest(pip_join(encode_images(imgs), ALL_LAYERS)))
+    assert plan.count("ArrowEvalPython") == 1
+    assert "cell_seg" in plan
+    assert "parity_contains" not in plan
+    assert "s2_token" not in plan
 
 
 def test_cc_star_phases_are_min_aggs_not_adjacency_arrays(spark):

@@ -92,3 +92,26 @@ def test_shard_plan_has_no_global_window(docs):
     assert "Window" in plan
     assert "SinglePartition" not in plan
     assert plan.count("BroadcastExchange") >= 1  # the offsets table join
+
+
+def test_slice_ids_exact_past_2_53(spark):
+    """Token offsets past 2^53 (a 100 TB stream) must land on the exact
+    slice: integer DIV on the Spark side, integer ``//`` in the DuckDB
+    twins.  A double division rounds these offsets and is off by one."""
+    import duckdb
+
+    from s2_geometry_library_java_spark.operators.prep import _slice_id
+
+    offsets = [0, 2047, 2048, 2**53 + 1, 2**53 + 2047, 3 * 2**53 - 1, 2**62 + 2049]
+    sizes = [3, 2048]
+    df = spark.createDataFrame([(o,) for o in offsets], "_o long")
+    for c in sizes:
+        got = [r[0] for r in df.select(_slice_id(F.col("_o"), c)).collect()]
+        assert got == [o // c for o in offsets]
+        assert dict(df.select(_slice_id(F.col("_o"), c).alias("s")).dtypes)["s"] == "bigint"
+        twin = duckdb.sql(
+            f"SELECT CAST(o // {c} AS BIGINT) FROM unnest({offsets}::BIGINT[]) t(o)"
+        ).fetchall()
+        assert [r[0] for r in twin] == [o // c for o in offsets]
+    # the old double form really is wrong on these offsets
+    assert any(int(float(o) / 3) != o // 3 for o in offsets)
